@@ -83,7 +83,7 @@ object ProfileQuery {
       for (run <- 1 to 3) {
         Thread.sleep(200) // let straggler listener events drain
         listener.synchronized { jobs.clear(); jobStart.clear()
-          executorRunMs = 0L; executorCpuMs = 0L; tasks = 0L }
+          jobDesc.clear(); executorRunMs = 0L; executorCpuMs = 0L; tasks = 0L }
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
         exec(fn(spark, sfDir))
@@ -108,10 +108,12 @@ object ProfileQuery {
           f"execCpu=${executorCpuMs / 1e3}%.3f tasks=$tasks")
         if (dumpJobs && run == 3) listener.synchronized {
           // timeline: per job, the driver gap since the previous
-          // job's end (planning/collect/broadcast time) + job length
+          // job's end (planning/collect/broadcast time) + job length;
+          // a job that starts before an earlier one ends (AQE) has gap 0
           var prevEnd = t0
           jobs.sortBy(_._2).foreach { case (id, a, b) =>
-            println(f"  JOB $id%4d gapBefore=${(a - prevEnd) / 1e9}%6.3f " +
+            val gapS = math.max(0L, a - prevEnd) / 1e9
+            println(f"  JOB $id%4d gapBefore=$gapS%6.3f " +
               f"len=${(b - a) / 1e9}%6.3f  ${jobDesc.getOrElse(id, "?")}")
             prevEnd = math.max(prevEnd, b)
           }

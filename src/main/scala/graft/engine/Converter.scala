@@ -1,12 +1,17 @@
 package graft.engine
 
 import graft.ingest.XmlIngest
+import graft.model.Schemas
 import graft.relationships._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** The four public tables of the property-graph model. */
+/** The four public tables of the property-graph model. `caches` are the
+  * cached intermediates the tables derive from but do not expose (the
+  * ingest parse cache); [[GraphTables.unpersist]] releases them too. */
 final case class GraphTables(documents: DataFrame, nodes: DataFrame,
-    properties: DataFrame, crossReferences: DataFrame) {
+    properties: DataFrame, crossReferences: DataFrame,
+    caches: Seq[Dataset[_]] = Nil) {
 
   /** Register SQL-accessible temp views (the working version of the
     * reference's vestigial `create_views`, main.rb:100-107). Views
@@ -54,21 +59,41 @@ final case class GraphTables(documents: DataFrame, nodes: DataFrame,
 
 object GraphTables {
   /** Release any caches backing these tables (the converter caches
-    * nodes/properties for adapter reuse; call this when done with a
-    * conversion in a long-lived session). */
+    * nodes/properties for adapter reuse, and ingest caches the parsed
+    * documents; call this when done with a conversion in a long-lived
+    * session). */
   def unpersist(t: GraphTables): Unit = {
     t.documents.unpersist()
     t.nodes.unpersist()
     t.properties.unpersist()
     t.crossReferences.unpersist()
+    t.caches.foreach(_.unpersist())
   }
 
-  /** Reload previously written tables. */
-  def read(spark: SparkSession, dir: String): GraphTables = GraphTables(
-    spark.read.parquet(s"$dir/documents"),
-    spark.read.parquet(s"$dir/nodes"),
-    spark.read.parquet(s"$dir/node_properties"),
-    spark.read.parquet(s"$dir/cross_references"))
+  /** The nodes schema in its on-disk order: [[write]] partitions by
+    * `node_type`, and a partition column reads back last. */
+  private val storedNodes: StructType = StructType(
+    Schemas.nodes.filterNot(_.name == "node_type") :+ Schemas.nodes("node_type"))
+
+  /** Reload previously written tables. Each table opens with its
+    * [[graft.model.Schemas]] schema instead of an inferred one:
+    * inference runs one Spark job per table, and it types the
+    * `node_type` partition column as a double when every directory name
+    * parses as one (`node_type=NaN`, `node_type=Infinity`). Opening
+    * only lists the files, so a missing table still fails here, while
+    * files written with another schema fail when a query scans them.
+    * The listing runs on the driver, with no Spark job, unless `nodes`
+    * has more `node_type` directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32). */
+  def read(spark: SparkSession, dir: String): GraphTables = {
+    def table(name: String, schema: StructType) =
+      spark.read.schema(schema).parquet(s"$dir/$name")
+    GraphTables(
+      table("documents", Schemas.documents),
+      table("nodes", storedNodes),
+      table("node_properties", Schemas.nodeProperties),
+      table("cross_references", Schemas.crossReferences))
+  }
 }
 
 /** End-to-end XML directory → property-graph tables.
@@ -99,7 +124,7 @@ class Converter(
         RelationshipAdapter.detectAll(adapters, nodes, properties)
       else
         RelationshipAdapter.detectAll(Nil, nodes, properties)
-    GraphTables(t.documents, nodes, properties, xrefs)
+    GraphTables(t.documents, nodes, properties, xrefs, t.caches)
   }
 
   def convertAndWrite(inputDir: String, outDir: String): GraphTables = {
@@ -182,7 +207,7 @@ class Converter(
       else
         RelationshipAdapter.detectAll(Nil, nodes, liveProps)
     val xrefs = prev.crossReferences.unionByName(fresh).distinct()
-    GraphTables(documents, nodes, properties, xrefs)
+    GraphTables(documents, nodes, properties, xrefs, t2.caches)
   }
 }
 

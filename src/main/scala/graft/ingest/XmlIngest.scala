@@ -281,9 +281,10 @@ object XmlIngest {
     }
   }
 
-  /** Exploded + deduplicated public tables. */
+  /** Exploded + deduplicated public tables; `caches` holds the parse
+    * cache they derive from, for the caller to release when done. */
   final case class XmlTables(documents: DataFrame, nodes: DataFrame,
-      properties: DataFrame)
+      properties: DataFrame, caches: Seq[Dataset[_]] = Nil)
 
   /** Explode the per-document IR into the three public tables, applying
     * `INSERT OR REPLACE` key semantics: for each primary key the *last*
@@ -293,7 +294,8 @@ object XmlIngest {
     val spark = parsedInput.sparkSession
     import spark.implicits._
     // Three tables derive from one parse — cache the IR so the DOM walk
-    // runs once per file, not once per output table.
+    // runs once per file, not once per output table. The cache goes out
+    // with the tables (XmlTables.caches), so their owner can release it.
     val parsed = parsedInput.cache()
 
     // Last-write-wins as a max_by hash aggregate, not a row_number
@@ -350,7 +352,7 @@ object XmlIngest {
       .select($"node_id", $"property_name", $"property_value", $"data_type",
         $"document_id")
 
-    XmlTables(documents, nodes, properties)
+    XmlTables(documents, nodes, properties, Seq(parsed))
   }
 
   /** Widened per-rowTag read via Spark's built-in XML source — the

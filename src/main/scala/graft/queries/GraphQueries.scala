@@ -237,13 +237,13 @@ object GraphQueries {
   // --- recursive hierarchy --------------------------------------
 
   /** README.md:138-146: full tree with level, built over the
-    * `nodes.parent_id` adjacency — seeds are parentless nodes. */
+    * `nodes.parent_id` adjacency — seeds are parentless nodes. The
+    * README CTE has no depth cap, so neither has this: levels come
+    * from [[Recursion.rootDepths]] (O(log depth) rounds), and nodes
+    * whose parent chain never reaches a root are left out, as the CTE
+    * leaves them out. */
   def nodeTree(t: GraphTables): DataFrame = {
-    val edges = t.nodes.filter(col("parent_id").isNotNull)
-      .select(col("parent_id").as("src"), col("id").as("dst"))
-    val seeds = t.nodes.filter(col("parent_id").isNull)
-      .select(col("id").as("node"))
-    val tree = Recursion.descendUnrolled(edges, seeds, maxDepth = 10)
+    val tree = Recursion.rootDepths(t.nodes)
       .select(col("node"), col("depth").as("level"))
     tree.join(t.nodes, tree("node") === t.nodes("id"))
       .select(col("id"), col("node_type"), col("parent_id"), col("content"),

@@ -128,6 +128,53 @@ object Recursion {
     levels.reverse.reduce(_ unionAll _)
   }
 
+  /** Distance to the root for every node of a forest given as
+    * `(id, parent_id)` rows, roots having a null `parent_id` — the
+    * levels of an uncapped `WITH RECURSIVE` descent from the roots
+    * (README.md:138-146), by pointer doubling rather than one join per
+    * level. Each pending node holds an (ancestor, distance) pair; every
+    * round replaces its ancestor by that ancestor's own, so the jump
+    * doubles and a chain of depth d settles in about log2(d) rounds. A
+    * node settles when its ancestor has a depth (its depth = distance +
+    * that depth) and drops out when its ancestor is no node at all (a
+    * dangling `parent_id`). While some pending chain still ends at a
+    * root or a dangling parent, every round settles or drops at least
+    * one node; so the loop stops at the first round that changes
+    * nothing, and the nodes still pending, on or under a parent cycle,
+    * are left out, as the CTE leaves them out. Output: (node, depth),
+    * roots at 0; `id` must be unique, as the nodes PK is. */
+  def rootDepths(parents: DataFrame): DataFrame = {
+    val p = parents.select(col("id"), col("parent_id"))
+    var resolved = p.filter(col("parent_id").isNull)
+      .select(col("id").as("node"), lit(0).as("depth"))
+    var pending = p.filter(col("parent_id").isNotNull)
+      .select(col("id").as("node"), col("parent_id").as("anc"),
+        lit(1).as("dist"))
+    var left = Long.MaxValue // pending rows, counted from round one on
+    var progressed = true
+    while (left > 0 && progressed) {
+      // a resolved ancestor ends the walk (no next hop); a pending one
+      // passes on its own ancestor and distance
+      val hop = resolved.select(col("node").as("via"),
+          lit(null).cast("string").as("next"), col("depth").as("d"))
+        .unionAll(pending.select(col("node").as("via"),
+          col("anc").as("next"), col("dist").as("d")))
+      // lazy: the count below is the one action that fills it
+      val step = pending.join(hop, col("anc") === col("via"))
+        .select(col("node"), col("next"), (col("dist") + col("d")).as("dist"))
+        .localCheckpoint(eager = false)
+      resolved = resolved.unionAll(step.filter(col("next").isNull)
+        .select(col("node"), col("dist").as("depth")))
+      pending = step.filter(col("next").isNotNull)
+        .select(col("node"), col("next").as("anc"), col("dist"))
+      // one job; Dataset.count would add a shuffle stage
+      val now = pending.rdd.count()
+      progressed = now < left
+      left = now
+    }
+    resolved
+  }
+
   /** Min-depth reachability via GraphX Pregel — the 100 TB form of
     * [[descend]]. The CTE semantics enumerate every path (output grows
     * with path count, which explodes on dense graphs); at corpus scale

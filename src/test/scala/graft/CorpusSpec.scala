@@ -316,4 +316,74 @@ class CorpusSpec extends SparkSpec {
       graft.queries.XmlQueries.fixturesDir, "GRAFT_FIXTURES") ===
       graft.queries.XmlQueries.fixturesDir)
   }
+
+  /** Tables of an XML directory written from `files` (name → text),
+    * relationship detection off: `nodeTree` reads `nodes` only. */
+  def treeTables(files: (String, String)*): GraphTables = {
+    val in = java.nio.file.Files.createTempDirectory("graft-tree")
+    files.foreach { case (name, xml) =>
+      java.nio.file.Files.write(in.resolve(name), xml.getBytes("UTF-8"))
+    }
+    new Converter(spark, Nil, detectRelationships = false).convert(in.toString)
+  }
+
+  /** A chain of `levels` id-bearing `c` elements, each with a leaf. */
+  def chainXml(levels: Int): String =
+    (0 until levels).map(k => s"""<c id="c$k"><leaf id="l$k">t$k</leaf>""")
+      .mkString + "</c>" * levels
+
+  /** The README.md:138-146 `node_tree` CTE, verbatim but for the table
+    * name, run by Spark over `t.nodes`. */
+  def cteTree(t: GraphTables): Seq[(String, String, String, String, Int)] = {
+    t.nodes.createOrReplaceTempView("tree_nodes")
+    spark.sql(
+      """WITH RECURSIVE node_tree AS (
+        |  SELECT id, node_type, parent_id, content, 0 as level
+        |  FROM tree_nodes WHERE parent_id IS NULL
+        |  UNION ALL
+        |  SELECT n.id, n.node_type, n.parent_id, n.content, nt.level + 1
+        |  FROM tree_nodes n
+        |  JOIN node_tree nt ON n.parent_id = nt.id
+        |)
+        |SELECT * FROM node_tree ORDER BY level, id""".stripMargin)
+      .as[(String, String, String, String, Int)].collect().toSeq
+  }
+
+  def engineTree(t: GraphTables): Seq[(String, String, String, String, Int)] =
+    GraphQueries.nodeTree(t).as[(String, String, String, String, Int)]
+      .collect().toSeq
+
+  test("node tree has no depth cap: 231 chain levels, O(log depth) jobs") {
+    val t = treeTables("deep.xml" -> chainXml(231))
+    val (rows, jobs) = jobsDuring(engineTree(t))
+    val levels = rows.map(r => r._1 -> r._5).toMap
+    assert(rows.size === 2 * 231)
+    assert((0 until 231).forall(k =>
+      levels(s"c$k") === k && levels(s"l$k") === k + 1))
+    // a join per level would run at least one job per level
+    assert(jobs < 60, s"$jobs jobs")
+  }
+
+  test("node tree equals Spark's WITH RECURSIVE node_tree over 64 levels") {
+    val t = treeTables("deep.xml" -> chainXml(64))
+    val expected = cteTree(t)
+    assert(expected.size === 128)
+    assert(engineTree(t) === expected)
+  }
+
+  test("node tree leaves out parent cycles and dangling parents") {
+    val t = treeTables(
+      // within-file duplicate ids, last write wins: A -> B -> A
+      "cycle.xml" -> """<A id="A"><B id="B"><A id="A"><B id="B"/></A></B></A>""",
+      // d2's b takes slot (r, 0) from a, leaving k's parent missing
+      "d1.xml" -> """<r id="r"><a id="a"><k id="k"/></a></r>""",
+      "d2.xml" -> """<r id="r"><b id="b"/></r>""")
+    val parents = t.nodes.select($"id", $"parent_id")
+      .as[(String, Option[String])].collect().toMap
+    assert(parents === Map("A" -> Some("B"), "B" -> Some("A"),
+      "r" -> None, "b" -> Some("r"), "k" -> Some("a")))
+    val tree = engineTree(t)
+    assert(tree.map(r => r._1 -> r._5) === Seq("r" -> 0, "b" -> 1))
+    assert(tree === cteTree(t))
+  }
 }

@@ -9,6 +9,37 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val fixturesDir: String = SparkSpec.fixturesDir
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Runs `body` and returns its result with the number of Spark jobs
+    * it submitted. Only jobs carrying a local property set on this
+    * thread count, so jobs of other threads do not; a marker job run
+    * afterwards shows that every earlier job event has been delivered. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.probe"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(t) if t == s"$tag/marker" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = try body finally sc.setLocalProperty(key, s"$tag/marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start event never arrived")
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

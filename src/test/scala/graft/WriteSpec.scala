@@ -1,7 +1,9 @@
 package graft
 
 import graft.engine.{Converter, GraphTables}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import java.nio.file.Files
 
@@ -33,6 +35,76 @@ class WriteSpec extends SparkSpec {
       $"position", $"content", $"xpath").as[(String, String,
       Option[String], Int, Option[String], String)].collect().toSet
     assert(a === b)
+  }
+
+  /** A fresh database written from the bundled fixtures. */
+  def writtenDb(): String = {
+    val out = Files.createTempDirectory("graft-db").toString
+    GraphTables.unpersist(new Converter(spark, Converter.coreAdapters)
+      .convertAndWrite(fixturesDir, out))
+    out
+  }
+
+  lazy val db: String = writtenDb()
+
+  test("GraphTables.read opens a database without a Spark job") {
+    val dir = db // written before the count starts
+    val (back, jobs) = jobsDuring(GraphTables.read(spark, dir))
+    assert(jobs === 0)
+    assert(back.nodes.count() === 40)
+  }
+
+  test("GraphTables.read schemas equal the ones inference finds") {
+    val back = GraphTables.read(spark, db)
+    Seq("documents" -> back.documents, "nodes" -> back.nodes,
+        "node_properties" -> back.properties,
+        "cross_references" -> back.crossReferences).foreach {
+      case (name, df) =>
+        assert(df.schema === spark.read.parquet(s"$db/$name").schema, name)
+    }
+    assert(back.nodes.columns.last === "node_type")
+  }
+
+  test("GraphTables.read fails on a missing table, naming its path") {
+    val out = writtenDb()
+    val xrefs = new java.io.File(s"$out/cross_references")
+    Files.walk(xrefs.toPath).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    val e = intercept[AnalysisException](GraphTables.read(spark, out))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    assert(e.getMessage.contains(xrefs.getPath), e.getMessage)
+  }
+
+  test("node types that parse as doubles read back as strings") {
+    // inference types a partition column whose every value parses as a
+    // double (`node_type=NaN`, `node_type=Infinity`) as DoubleType
+    val in = Files.createTempDirectory("graft-nan")
+    Files.write(in.resolve("nan.xml"),
+      """<NaN id="n1"><Infinity id="i1"/><Infinity id="i2"/></NaN>"""
+        .getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft-nan-db").toString
+    GraphTables.unpersist(new Converter(spark, Converter.coreAdapters)
+      .convertAndWrite(in.toString, out))
+    val back = GraphTables.read(spark, out)
+    assert(back.nodes.schema("node_type").dataType === StringType)
+    val rows = back.nodes.select($"id", $"node_type").as[(String, String)]
+      .collect().toSet
+    assert(rows === Set("n1" -> "NaN", "i1" -> "Infinity", "i2" -> "Infinity"))
+    assert(back.nodes.filter($"node_type" === "Infinity").count() === 2)
+  }
+
+  test("GraphTables.unpersist releases the parse cache as well") {
+    // the session is shared, so earlier suites' cached RDDs may remain
+    def cached() = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.id -> i.name).toMap
+    val before = cached()
+    val out = Files.createTempDirectory("graft-release").toString
+    val t = new Converter(spark, Converter.coreAdapters)
+      .convertAndWrite(fixturesDir, out)
+    assert((cached().keySet -- before.keySet).size >= 3)
+    GraphTables.unpersist(t)
+    val left = cached() -- before.keySet
+    assert(left.isEmpty, left.values.mkString("; "))
   }
 
   test("CLI main converts a directory and prints stats") {
