@@ -70,13 +70,7 @@ object Main {
     // reuse an already-running session (e.g. under test) and leave its
     // lifecycle alone; stop only a session this run created
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$concurrency]")
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", concurrency)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$concurrency]", Some(concurrency.toInt))
     // -v mirrors main.rb's verbose progress logging via Spark's own
     // job/stage logs
     spark.sparkContext.setLogLevel(if (verbose) "INFO" else "WARN")

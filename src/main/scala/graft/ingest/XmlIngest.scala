@@ -85,9 +85,22 @@ object XmlIngest {
     factory.setNamespaceAware(false)
     factory.setCoalescing(true)
     factory.setIgnoringComments(true)
-    factory.setFeature(
-      "http://apache.org/xml/features/nonvalidating/load-external-dtd", false)
+    noExternalEntities(factory.setFeature)
+    factory.setAttribute(javax.xml.XMLConstants.ACCESS_EXTERNAL_DTD, "")
+    factory.setAttribute(javax.xml.XMLConstants.ACCESS_EXTERNAL_SCHEMA, "")
     factory.newDocumentBuilder()
+  }
+
+  /** Turns off everything that reads outside the file: the external DTD
+    * and external general and parameter entities. `load-external-dtd`
+    * alone still resolves `<!ENTITY x SYSTEM "file:…">`, which would put
+    * a local file's bytes into `nodes.content`; the reference's Nokogiri
+    * default does not substitute external entities either. */
+  private def noExternalEntities(set: (String, Boolean) => Unit): Unit = {
+    set("http://apache.org/xml/features/nonvalidating/load-external-dtd",
+      false)
+    set("http://xml.org/sax/features/external-general-entities", false)
+    set("http://xml.org/sax/features/external-parameter-entities", false)
   }
 
   /** Reconstruct the parseable prefix of a malformed file as a DOM
@@ -108,10 +121,10 @@ object XmlIngest {
     val doc = builder.newDocument()
     val factory = javax.xml.parsers.SAXParserFactory.newInstance()
     factory.setNamespaceAware(false)
-    factory.setFeature(
-      "http://apache.org/xml/features/nonvalidating/load-external-dtd",
-      false)
+    noExternalEntities(factory.setFeature)
     val parser = factory.newSAXParser()
+    parser.setProperty(javax.xml.XMLConstants.ACCESS_EXTERNAL_DTD, "")
+    parser.setProperty(javax.xml.XMLConstants.ACCESS_EXTERNAL_SCHEMA, "")
     val handler = new org.xml.sax.helpers.DefaultHandler {
       private var stack: List[Element] = Nil
       private val text = new StringBuilder

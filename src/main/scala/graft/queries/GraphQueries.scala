@@ -238,12 +238,13 @@ object GraphQueries {
 
   /** README.md:138-146: full tree with level, built over the
     * `nodes.parent_id` adjacency — seeds are parentless nodes. The
-    * README CTE has no depth cap, so neither has this: levels come
-    * from [[Recursion.rootDepths]] (O(log depth) rounds), and nodes
+    * README CTE has no depth cap, so neither has this: levels come from
+    * [[Recursion.treeDepths]] (a driver-side walk up the parent chains
+    * below the broadcast size, pointer doubling above it), and nodes
     * whose parent chain never reaches a root are left out, as the CTE
     * leaves them out. */
   def nodeTree(t: GraphTables): DataFrame = {
-    val tree = Recursion.rootDepths(t.nodes)
+    val tree = Recursion.treeDepths(t.nodes)
       .select(col("node"), col("depth").as("level"))
     tree.join(t.nodes, tree("node") === t.nodes("id"))
       .select(col("id"), col("node_type"), col("parent_id"), col("content"),
@@ -252,41 +253,59 @@ object GraphQueries {
   }
 
   /** sql_queries.md:51-74: ancestors of a node with depth and
-    * prepended " -> " path, capped at depth 10. */
+    * prepended " -> " path, capped at depth 10. The CTE seeds with the
+    * node itself (`SELECT DISTINCT`) when some parent_child edge
+    * targets it; the walk runs on the driver over the collected edges. */
   def ancestors(t: GraphTables, nodeId: String): DataFrame = {
-    val edges = parentChildEdges(t)
-    val seeds = t.crossReferences
-      .filter(col("target_node_id") === nodeId &&
-        col("reference_type") === "parent_child")
-      .select(col("target_node_id").as("node")).distinct()
-    Recursion.ascendUnrolled(edges, seeds, maxDepth = 10)
-      .filter(col("depth") > 0)
-      .select(col("node").as("ancestor_id"), col("depth"), col("path"))
-      .orderBy(col("depth"))
+    val up = Recursion.adjacency(parentChildPairs(t).map(_.swap))
+    t.crossReferences.sparkSession
+      .createDataFrame(capped(up, nodeId, prependPath = true))
+      .toDF("ancestor_id", "depth", "path").orderBy(col("depth"))
   }
 
   /** sql_queries.md:79-103: descendants with depth and appended path. */
   def descendants(t: GraphTables, nodeId: String): DataFrame = {
-    val edges = parentChildEdges(t)
-    val seeds = t.crossReferences
-      .filter(col("source_node_id") === nodeId &&
-        col("reference_type") === "parent_child")
-      .select(col("source_node_id").as("node")).distinct()
-    Recursion.descendUnrolled(edges, seeds, maxDepth = 10)
-      .filter(col("depth") > 0)
-      .select(col("node").as("descendant_id"), col("depth"), col("path"))
+    val down = Recursion.adjacency(parentChildPairs(t))
+    t.crossReferences.sparkSession
+      .createDataFrame(capped(down, nodeId, prependPath = false))
+      .toDF("descendant_id", "depth", "path")
       .orderBy(col("depth"), col("descendant_id"))
   }
 
   /** sql_queries.md:210-235: the `hierarchical_paths` view — every
     * (descendant, ancestor) pair with depth and the ancestor-to-
-    * descendant chain, over parent_child edges, depth-capped at 10. */
-  def hierarchicalPaths(t: GraphTables): DataFrame =
-    Recursion.ancestorPathsUnrolled(parentChildEdges(t), maxDepth = 10)
+    * descendant chain, over parent_child edges, depth-capped at 10.
+    * The answer is about ten rows per edge, so each edge row is walked
+    * up on the executors; the reverse adjacency rides in the task
+    * closure, shipped once per stage as a broadcast join's edges are. */
+  def hierarchicalPaths(t: GraphTables): DataFrame = {
+    val up = Recursion.adjacency(parentChildPairs(t).map(_.swap))
+    val spark = t.crossReferences.sparkSession
+    import spark.implicits._
+    parentChildEdges(t).as[(String, String)]
+      .flatMap { case (src, dst) =>
+        Recursion.walk(up, src, 1, Recursion.arrow(src, dst), 10,
+          prependPath = true).map { case (a, d, p) => (dst, a, d, p) }
+      }
+      .toDF("descendant_id", "ancestor_id", "depth", "path")
       .orderBy(col("descendant_id"), col("depth"))
+  }
+
+  /** The capped CTE's rows past its seed: empty unless `nodeId` has an
+    * edge in `adjacency`, as the CTE's seed comes from the edge table. */
+  private def capped(adjacency: Map[String, Array[String]], nodeId: String,
+      prependPath: Boolean): Seq[(String, Int, String)] =
+    if (!adjacency.contains(nodeId)) Nil
+    else Recursion.walk(adjacency, nodeId, 0, nodeId, 10, prependPath)
+      .filter(_._2 > 0).toSeq
 
   private def parentChildEdges(t: GraphTables): DataFrame =
     t.crossReferences.filter(col("reference_type") === "parent_child")
       .select(col("source_node_id").as("src"),
         col("target_node_id").as("dst"))
+
+  /** The parent_child edges as (source, target), collected: one job. */
+  private def parentChildPairs(t: GraphTables): Seq[(String, String)] =
+    parentChildEdges(t).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1)))
 }

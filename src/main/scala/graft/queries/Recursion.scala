@@ -1,23 +1,28 @@
 package graft.queries
 
-import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel, VertexId}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Depth-capped iterative graph expansion — the engine's recursive-CTE
-  * workhorse (SURVEY.md U2).
+import scala.collection.mutable
+
+/** Depth-capped graph expansion — the engine's recursive-CTE workhorse
+  * (SURVEY.md U2).
   *
   * The reference's traversal queries are SQLite `WITH RECURSIVE` over
   * the `cross_references` edge table with a depth guard and a string
   * path accumulator (examples/sql_queries.md:51-103). Spark 4.1 ships
   * native recursive CTEs (`UnionLoopExec`) for the SQL-text route —
-  * exercised in the test suite — but the DataFrame-level API here keeps
-  * the traversal a first-class, composable operator: a bounded loop of
-  * broadcast-friendly equi-joins with an early exit on an empty
-  * frontier. Each level is one shuffle keyed by the join key; the
-  * frontier is cached and released level by level, so at cluster scale
-  * this is the standard BFS-on-Spark pattern (no driver-side row
-  * collection — only an `isEmpty` probe per level).
+  * exercised in the test suite. Two physical forms live here:
+  *
+  *  - [[walk]]: a plain-Scala walk over an in-memory adjacency, for
+  *    hierarchies small enough to collect (the capped `GraphQueries`
+  *    traversals, and [[treeDepths]] below the broadcast size). One
+  *    job collects the edges; the walk itself runs no Spark job.
+  *  - [[descend]]/[[ascend]]/[[ancestorPaths]]: a bounded loop of
+  *    equi-joins with an early exit on an empty frontier, each level
+  *    checkpointed — the BFS-on-Spark shape with no driver-side row
+  *    collection; and [[rootDepths]], pointer doubling for the uncapped
+  *    node tree over inputs too large to collect.
   */
 object Recursion {
 
@@ -65,67 +70,91 @@ object Recursion {
     acc
   }
 
-  /** Statically unrolled expansion — the right physical shape when the
-    * depth cap is small and known (every reference CTE caps at 10,
-    * sql_queries.md:72,100,233): build all `maxDepth` join levels as
-    * one declarative plan and run a single Spark job, exactly what a
-    * bounded recursive CTE compiles to. No per-level checkpoints or
-    * emptiness probes means no per-level job-scheduling barriers — on
-    * small/medium graphs this is ~10× cheaper than the iterative
-    * form; levels past the true depth join an empty frontier and cost
-    * nothing at runtime. The edge side carries a broadcast hint so
-    * every level reuses one broadcast exchange. For unbounded or deep
-    * recursion over edge sets too large to broadcast, use [[descend]]/
-    * [[ascend]] (checkpointed loop, early exit) instead. */
-  def descendUnrolled(edges: DataFrame, seeds: DataFrame,
-      maxDepth: Int): DataFrame =
-    expandUnrolled(edges, seeds, maxDepth, prependPath = false)
+  /** `(from, to)` pairs as an adjacency: each non-null `from` maps to
+    * its `to`s, one entry per pair, so a duplicated edge is walked
+    * twice as a UNION ALL join meets it twice. */
+  def adjacency(pairs: Iterable[(String, String)]): Map[String, Array[String]] =
+    pairs.filter(_._1 != null).groupMap(_._1)(_._2)
+      .map { case (k, v) => k -> v.toArray }
 
-  /** Unrolled ancestor variant of [[ascend]]. */
-  def ascendUnrolled(edges: DataFrame, seeds: DataFrame,
-      maxDepth: Int): DataFrame =
-    expandUnrolled(edges.select(col("dst").as("src"), col("src").as("dst")),
-      seeds, maxDepth, prependPath = true)
-
-  /** Unrolled [[ancestorPaths]] — same output, single job. */
-  def ancestorPathsUnrolled(edges: DataFrame, maxDepth: Int): DataFrame = {
-    val e = broadcast(edges.select(col("src"), col("dst")))
-    val base = e.select(col("dst").as("descendant_id"),
-      col("src").as("ancestor_id"), lit(1).as("depth"),
-      concat(col("src"), lit(" -> "), col("dst")).as("path"))
-    var levels = List(base)
-    var frontier = base
-    (2 to maxDepth).foreach { _ =>
-      val next = frontier.alias("f")
-        .join(e.alias("e"), col("f.ancestor_id") === col("e.dst"))
-        .select(col("f.descendant_id"), col("e.src").as("ancestor_id"),
-          (col("f.depth") + 1).as("depth"),
-          concat(col("e.src"), lit(" -> "), col("f.path")).as("path"))
-      levels ::= next
-      frontier = next
-    }
-    levels.reverse.reduce(_ unionAll _)
+  /** The rows of a capped recursive CTE over `adjacency`, seeded with
+    * one row `(node, depth, path)`: that row, then depth-first every row
+    * the recursive arm derives from it, as `(node, depth, path)`. A row
+    * at depth d expands only while d < `maxDepth`; a row whose node is
+    * null never expands (a null never joins). Each step joins the next
+    * node onto the path with " -> ", before it when `prependPath`
+    * (ancestor walks), after it otherwise; a null on either side makes
+    * the path null, as SQL's `||` does. Multiplicity is UNION ALL's: a
+    * node reached by two paths is two rows, and a cycle is walked until
+    * the cap. Lazy, so an executor can stream it. */
+  def walk(adjacency: collection.Map[String, Array[String]], node: String,
+      depth: Int, path: String, maxDepth: Int,
+      prependPath: Boolean): Iterator[(String, Int, String)] = {
+    def next = if (node == null || depth >= maxDepth) Iterator.empty
+      else adjacency.getOrElse(node, Array.empty[String]).iterator
+        .flatMap { n =>
+          val p = if (prependPath) arrow(n, path) else arrow(path, n)
+          walk(adjacency, n, depth + 1, p, maxDepth, prependPath)
+        }
+    Iterator.single((node, depth, path)) ++ next
   }
 
-  private def expandUnrolled(edges: DataFrame, seeds: DataFrame,
-      maxDepth: Int, prependPath: Boolean): DataFrame = {
-    val e = broadcast(edges.select(col("src"), col("dst")))
-    val base = seeds.select(col("node"), lit(0).as("depth"),
-      col("node").as("path"))
-    var levels = List(base)
-    var frontier = base
-    (1 to maxDepth).foreach { _ =>
-      val stepPath =
-        if (prependPath) concat(col("e.dst"), lit(" -> "), col("f.path"))
-        else concat(col("f.path"), lit(" -> "), col("e.dst"))
-      val next = frontier.alias("f")
-        .join(e.alias("e"), col("f.node") === col("e.src"))
-        .select(col("e.dst").as("node"),
-          (col("f.depth") + 1).as("depth"), stepPath.as("path"))
-      levels ::= next
-      frontier = next
+  /** `a -> b`, null if either side is. */
+  def arrow(a: String, b: String): String =
+    if (a == null || b == null) null else s"$a -> $b"
+
+  /** Whether the optimizer's size estimate for `df` is within
+    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark itself
+    * would ship whole to every task (so also collect to the driver).
+    * Reading the estimate runs no job; a threshold of -1 says no. */
+  def fitsBroadcast(df: DataFrame): Boolean = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
+
+  /** Each node's level in a forest given as `(id, parent_id)` pairs,
+    * roots (null parent) at 0 — what [[rootDepths]] computes, by one
+    * memoized walk up the parent chains on the driver. A chain that
+    * reaches a dangling `parent_id`, or comes back to a node already on
+    * it (a parent cycle), leaves out every node on it, as the uncapped
+    * CTE never reaches them. Each node is climbed past once. */
+  def localRootDepths(parents: Iterable[(String, String)]): Map[String, Int] = {
+    val parentOf = parents.filter(_._1 != null).toMap
+    val out = -1 // the level of a node left out
+    val level = mutable.HashMap.empty[String, Int]
+    parentOf.keysIterator.foreach { start =>
+      val chain = mutable.LinkedHashSet.empty[String]
+      var node = start
+      while (node != null && parentOf.contains(node) &&
+          !level.contains(node) && !chain(node)) {
+        chain += node
+        node = parentOf(node)
+      }
+      // the chain's top hangs under a root's null parent, a settled
+      // node, a dangling parent id, or a node on the chain (a cycle)
+      val top =
+        if (node == null) 0
+        else if (level.getOrElse(node, out) != out) level(node) + 1
+        else out
+      chain.toSeq.reverseIterator.zipWithIndex.foreach { case (n, i) =>
+        level(n) = if (top == out) out else top + i
+      }
     }
-    levels.reverse.reduce(_ unionAll _)
+    level.filter(_._2 != out).toMap
+  }
+
+  /** (node, depth) for a forest of `(id, parent_id)` rows, chosen by
+    * size: [[localRootDepths]] over the collected pairs (one job) when
+    * they fit in a broadcast, otherwise [[rootDepths]]. */
+  def treeDepths(parents: DataFrame): DataFrame = {
+    val p = parents.select(col("id"), col("parent_id"))
+    if (!fitsBroadcast(p)) rootDepths(p)
+    else {
+      val spark = p.sparkSession
+      import spark.implicits._
+      val pairs = p.as[(String, String)].collect()
+      localRootDepths(pairs).toSeq.toDF("node", "depth")
+    }
   }
 
   /** Distance to the root for every node of a forest given as
@@ -173,58 +202,6 @@ object Recursion {
       left = now
     }
     resolved
-  }
-
-  /** Min-depth reachability via GraphX Pregel — the 100 TB form of
-    * [[descend]]. The CTE semantics enumerate every path (output grows
-    * with path count, which explodes on dense graphs); at corpus scale
-    * the question is usually "which nodes are reachable, how deep",
-    * and that is a vertex program: messages carry candidate depths,
-    * vertices keep the minimum, iteration stops at `maxDepth`.
-    * Output: (node, depth) with depth = shortest distance from any
-    * seed, seeds at 0. */
-  def descendDepthsPregel(edges: DataFrame, seeds: DataFrame,
-      maxDepth: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src"), col("dst")).as[(String, String)]
-    val seedSet = seeds.select(col("node")).as[String]
-    // sorted zipWithIndex: the name→id mapping is deterministic under
-    // recomputation, so no cache (and no leak) is needed
-    val ids = e.flatMap(p => Seq(p._1, p._2)).union(seedSet).distinct()
-      .rdd.sortBy(identity).zipWithIndex()
-    val idOf = ids.map(_.swap)
-    val seedIds: Set[VertexId] = seedSet.rdd.map(_ -> (())).join(ids)
-      .map { case (_, (_, vid)) => vid }.collect().toSet
-    val vertices = ids.map { case (_, vid) =>
-      (vid: VertexId, if (seedIds(vid)) 0 else Int.MaxValue)
-    }
-    val edgeRdd = e.rdd
-      .map(p => (p._1, p._2)).join(ids)
-      .map { case (_, (dst, srcId)) => (dst, srcId) }.join(ids)
-      .map { case (_, (srcId, dstId)) => Edge(srcId, dstId, ()) }
-    val graph = Graph(vertices, edgeRdd)
-    val result = Pregel(graph, initialMsg = Int.MaxValue,
-      maxIterations = maxDepth, activeDirection = EdgeDirection.Out)(
-      vprog = (_, attr, msg) => math.min(attr, msg),
-      sendMsg = t =>
-        if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-          Iterator((t.dstId, t.srcAttr + 1))
-        else Iterator.empty,
-      mergeMsg = math.min)
-    // same block-release discipline as Dedup.componentClusters: GraphX
-    // leaves the input and result graphs cached — materialize the
-    // small depth table, then free them so repeated calls in one
-    // session don't accumulate blocks
-    val out = result.vertices
-      .join(idOf)
-      .map { case (_, (depth, name)) => (name, depth) }
-      .toDF("node", "depth")
-      .filter(col("depth") <= maxDepth)
-      .localCheckpoint(true)
-    result.unpersist(blocking = false)
-    graph.unpersist(blocking = false)
-    out
   }
 
   private def expand(edges: DataFrame, seeds: DataFrame, maxDepth: Int,

@@ -300,24 +300,35 @@ class AdapterSpec extends SparkSpec {
       ("level1_node", 3), ("root_node", 4)))
   }
 
-  test("unrolled recursion matches the iterative loop, cycles included") {
+  test("local walk matches the iterative loop, cycles and two parents included") {
     // branching DAG plus a cycle: the depth cap is the only terminator
-    // on the a->b->c->a loop, so path multisets must agree exactly
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("b", "d"))
-      .toDF("src", "dst")
+    // on the a->b->c->a loop, so path multisets must agree exactly; e
+    // has two parent_child parents (a and d), as a stranded upsert can
+    // leave, so it is reached along two paths
+    val pairs = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("b", "d"),
+      ("a", "e"), ("d", "e"))
+    val edges = pairs.toDF("src", "dst")
     val seeds = Seq("a").toDF("node")
+    val down = Recursion.adjacency(pairs)
+    val up = Recursion.adjacency(pairs.map(_.swap))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"node", $"depth", $"path").as[(String, Int, String)]
         .collect().toSeq.sorted
-    assert(rows(Recursion.descendUnrolled(edges, seeds, 10)) ===
+    def walked(adj: Map[String, Array[String]], prepend: Boolean) =
+      Recursion.walk(adj, "a", 0, "a", 10, prepend).toSeq.sorted
+    assert(walked(down, prepend = false) ===
       rows(Recursion.descend(edges, seeds, 10)))
-    assert(rows(Recursion.ascendUnrolled(edges, seeds, 10)) ===
+    assert(walked(up, prepend = true) ===
       rows(Recursion.ascend(edges, seeds, 10)))
+    assert(walked(down, prepend = false).count(_._1 == "e") > 1)
     def prows(df: org.apache.spark.sql.DataFrame) =
       df.select($"descendant_id", $"ancestor_id", $"depth", $"path")
         .as[(String, String, Int, String)].collect().toSeq.sorted
-    assert(prows(Recursion.ancestorPathsUnrolled(edges, 6)) ===
-      prows(Recursion.ancestorPaths(edges, 6)))
+    val paths = pairs.flatMap { case (s, d) =>
+      Recursion.walk(up, s, 1, Recursion.arrow(s, d), 6, prependPath = true)
+        .map { case (a, k, p) => (d, a, k, p) }
+    }
+    assert(paths.sorted === prows(Recursion.ancestorPaths(edges, 6)))
   }
 
   test("native WITH RECURSIVE matches the iterative traversal") {

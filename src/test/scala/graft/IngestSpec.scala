@@ -292,6 +292,36 @@ class IngestSpec extends SparkSpec {
     assert(children.toSeq === Seq(("A", 0, "one"), ("B", 1, "three")))
   }
 
+  test("external entities are never read into the tables") {
+    // a local file the XML names through a SYSTEM entity: once in a
+    // well-formed file (the DOM parse) and once in a truncated one (the
+    // SAX salvage parse), and once through a parameter entity
+    val marker = "SECRET_MARKER_4f1c"
+    val secret = Files.createTempFile("graft-secret", ".txt")
+    Files.write(secret, marker.getBytes(UTF_8))
+    val uri = secret.toUri.toString
+    val in = Files.createTempDirectory("graft-xxe")
+    def put(name: String, xml: String) =
+      Files.write(in.resolve(name), xml.getBytes(UTF_8))
+    put("general.xml", s"""<?xml version="1.0"?>
+      |<!DOCTYPE r [<!ENTITY x SYSTEM "$uri">]>
+      |<r id="g_root"><a id="g_a">before &x; after</a></r>""".stripMargin)
+    put("salvaged.xml", s"""<?xml version="1.0"?>
+      |<!DOCTYPE r [<!ENTITY x SYSTEM "$uri">]>
+      |<r id="s_root"><a id="s_a">&x;</a><b id="s_b">cut""".stripMargin)
+    put("parameter.xml", s"""<?xml version="1.0"?>
+      |<!DOCTYPE r [<!ENTITY % p SYSTEM "$uri"> %p;]>
+      |<r id="p_root">text</r>""".stripMargin)
+    val t = new graft.engine.Converter(spark).convert(in.toString)
+    Seq(t.documents, t.nodes, t.properties, t.crossReferences).foreach { df =>
+      val leaked = df.collect().flatMap(_.toSeq)
+        .filter(v => v != null && v.toString.contains(marker))
+      assert(leaked.isEmpty, df.columns.mkString(","))
+    }
+    assert(t.nodes.select("id").collect().map(_.getString(0)).toSet ===
+      Set("g_root", "g_a", "s_root", "s_a", "s_b", "p_root"))
+  }
+
   test("end-to-end directory ingest of bundled fixtures") {
     import spark.implicits._
     val t = XmlIngest.ingest(spark, fixturesDir)

@@ -3,7 +3,7 @@ package graft
 import graft.queries.{Recursion, Skew, StarQueries}
 import org.apache.spark.sql.functions._
 
-/** Scale-machinery behavior: salted joins, Pregel reachability, and a
+/** Scale-machinery behavior: salted joins, traversal forms, and a
   * many-file ingest. */
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
@@ -76,23 +76,6 @@ class ScaleSpec extends SparkSpec {
     val salted = Skew.saltedAgg(fact, "k", "v", numSalts = 8)
       .as[(Long, BigDecimal, Long)].collect().toSet
     assert(salted === plain)
-  }
-
-  test("Pregel min-depth agrees with the iterative traversal") {
-    val edges = StarQueries.t(spark, sf("sf0.001"), "nation")
-      .select(concat(lit("r_"), $"n_regionkey").as("src"),
-        concat(lit("n_"), $"n_nationkey").as("dst"))
-      .unionAll(StarQueries.t(spark, sf("sf0.001"), "supplier")
-        .select(concat(lit("n_"), $"s_nationkey").as("src"),
-          concat(lit("s_"), $"s_suppkey").as("dst")))
-    val seeds = StarQueries.t(spark, sf("sf0.001"), "region")
-      .select(concat(lit("r_"), $"r_regionkey").as("node"))
-    val loop = Recursion.descend(edges, seeds, maxDepth = 10)
-      .groupBy($"node").agg(min($"depth").as("depth"))
-      .as[(String, Int)].collect().toMap
-    val pregel = Recursion.descendDepthsPregel(edges, seeds, maxDepth = 10)
-      .as[(String, Int)].collect().toMap
-    assert(pregel === loop)
   }
 
   test("approx_count_distinct: the sketch substitute tracks exact counts") {
@@ -238,7 +221,7 @@ class ScaleSpec extends SparkSpec {
     assert(SCTest.check(params, prop).passed)
   }
 
-  test("property: unrolled recursion equals iterative on random graphs") {
+  test("property: local walk equals iterative on random graphs") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     // small dense-ish digraphs with cycles; depth cap keeps paths finite
     val genEdges = Gen.listOfN(8,
@@ -248,11 +231,11 @@ class ScaleSpec extends SparkSpec {
       edgeList.isEmpty || {
         val e = edgeList.toDF("src", "dst")
         val seeds = Seq("n0").toDF("node")
-        def rows(df: org.apache.spark.sql.DataFrame) =
-          df.select($"node", $"depth", $"path")
-            .as[(String, Int, String)].collect().toSeq.sorted
-        rows(Recursion.descendUnrolled(e, seeds, 4)) ===
-          rows(Recursion.descend(e, seeds, 4))
+        val walked = Recursion.walk(Recursion.adjacency(edgeList), "n0", 0,
+          "n0", 4, prependPath = false).toSeq.sorted
+        walked === Recursion.descend(e, seeds, 4)
+          .select($"node", $"depth", $"path")
+          .as[(String, Int, String)].collect().toSeq.sorted
       }
     }
     val params = SCTest.Parameters.default.withMinSuccessfulTests(6)
