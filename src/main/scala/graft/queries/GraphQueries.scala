@@ -238,14 +238,18 @@ object GraphQueries {
 
   /** README.md:138-146: full tree with level, built over the
     * `nodes.parent_id` adjacency — seeds are parentless nodes. The
-    * README CTE has no depth cap, so neither has this: levels come from
-    * [[Recursion.treeDepths]] (a driver-side walk up the parent chains
-    * below the broadcast size, pointer doubling above it), and nodes
-    * whose parent chain never reaches a root are left out, as the CTE
-    * leaves them out. */
+    * README CTE has no depth cap, so neither has this: the
+    * `(id, parent_id)` pairs are collected (one job) and
+    * [[Recursion.localRootDepths]] climbs the parent chains on the
+    * driver; nodes whose chain never reaches a root are left out, as the
+    * CTE leaves them out. Like the capped calls below, this holds the
+    * whole parent structure on the driver: about one pair per node. */
   def nodeTree(t: GraphTables): DataFrame = {
-    val tree = Recursion.treeDepths(t.nodes)
-      .select(col("node"), col("depth").as("level"))
+    val spark = t.nodes.sparkSession
+    import spark.implicits._
+    val pairs = t.nodes.select(col("id"), col("parent_id"))
+      .as[(String, String)].collect()
+    val tree = Recursion.localRootDepths(pairs).toSeq.toDF("node", "level")
     tree.join(t.nodes, tree("node") === t.nodes("id"))
       .select(col("id"), col("node_type"), col("parent_id"), col("content"),
         col("level"))
@@ -255,7 +259,10 @@ object GraphQueries {
   /** sql_queries.md:51-74: ancestors of a node with depth and
     * prepended " -> " path, capped at depth 10. The CTE seeds with the
     * node itself (`SELECT DISTINCT`) when some parent_child edge
-    * targets it; the walk runs on the driver over the collected edges. */
+    * targets it; the walk runs on the driver over the collected edges,
+    * and the answer is a local relation built there: one row per
+    * upward path of at most 10 edges, each up to 11 ids, so at most 10
+    * rows where every node has one parent. */
   def ancestors(t: GraphTables, nodeId: String): DataFrame = {
     val up = Recursion.adjacency(parentChildPairs(t).map(_.swap))
     t.crossReferences.sparkSession
@@ -263,7 +270,13 @@ object GraphQueries {
       .toDF("ancestor_id", "depth", "path").orderBy(col("depth"))
   }
 
-  /** sql_queries.md:79-103: descendants with depth and appended path. */
+  /** sql_queries.md:79-103: descendants with depth and appended path,
+    * walked on the driver like [[ancestors]]. The answer is built there
+    * too: one row per downward path of at most 10 edges, so about one
+    * row per node within 10 levels of `nodeId` (more where a node has
+    * two parents), each path up to 11 ids. For a document root that is
+    * on the order of the document's node count — the same order as the
+    * collected edge set, times the path length. */
   def descendants(t: GraphTables, nodeId: String): DataFrame = {
     val down = Recursion.adjacency(parentChildPairs(t))
     t.crossReferences.sparkSession
@@ -283,10 +296,7 @@ object GraphQueries {
     val spark = t.crossReferences.sparkSession
     import spark.implicits._
     parentChildEdges(t).as[(String, String)]
-      .flatMap { case (src, dst) =>
-        Recursion.walk(up, src, 1, Recursion.arrow(src, dst), 10,
-          prependPath = true).map { case (a, d, p) => (dst, a, d, p) }
-      }
+      .flatMap { case (src, dst) => Recursion.edgePaths(up, src, dst, 10) }
       .toDF("descendant_id", "ancestor_id", "depth", "path")
       .orderBy(col("descendant_id"), col("depth"))
   }

@@ -14,15 +14,15 @@ import scala.collection.mutable
   * native recursive CTEs (`UnionLoopExec`) for the SQL-text route —
   * exercised in the test suite. Two physical forms live here:
   *
-  *  - [[walk]]: a plain-Scala walk over an in-memory adjacency, for
-  *    hierarchies small enough to collect (the capped `GraphQueries`
-  *    traversals, and [[treeDepths]] below the broadcast size). One
-  *    job collects the edges; the walk itself runs no Spark job.
+  *  - [[walk]]/[[edgePaths]]/[[localRootDepths]]: plain-Scala walks
+  *    over the collected parent structure, for the four `GraphQueries`
+  *    hierarchy calls. One job collects the edges (or the
+  *    `(id, parent_id)` pairs); the walk itself runs no Spark job.
   *  - [[descend]]/[[ascend]]/[[ancestorPaths]]: a bounded loop of
   *    equi-joins with an early exit on an empty frontier, each level
   *    checkpointed — the BFS-on-Spark shape with no driver-side row
-  *    collection; and [[rootDepths]], pointer doubling for the uncapped
-  *    node tree over inputs too large to collect.
+  *    collection. `descend` serves `q21`; the three are also the
+  *    references the specs compare the walks with.
   */
 object Recursion {
 
@@ -99,25 +99,25 @@ object Recursion {
     Iterator.single((node, depth, path)) ++ next
   }
 
+  /** The `hierarchical_paths` rows an edge `src -> dst` yields, as
+    * `(descendant, ancestor, depth, path)`: the edge itself at depth 1,
+    * then one row per ancestor reached over `up` (child -> parents),
+    * each prepended to the path, up to `maxDepth`. */
+  def edgePaths(up: collection.Map[String, Array[String]], src: String,
+      dst: String, maxDepth: Int): Iterator[(String, String, Int, String)] =
+    walk(up, src, 1, arrow(src, dst), maxDepth, prependPath = true)
+      .map { case (a, d, p) => (dst, a, d, p) }
+
   /** `a -> b`, null if either side is. */
   def arrow(a: String, b: String): String =
     if (a == null || b == null) null else s"$a -> $b"
 
-  /** Whether the optimizer's size estimate for `df` is within
-    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark itself
-    * would ship whole to every task (so also collect to the driver).
-    * Reading the estimate runs no job; a threshold of -1 says no. */
-  def fitsBroadcast(df: DataFrame): Boolean = {
-    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
-  }
-
   /** Each node's level in a forest given as `(id, parent_id)` pairs,
-    * roots (null parent) at 0 — what [[rootDepths]] computes, by one
-    * memoized walk up the parent chains on the driver. A chain that
-    * reaches a dangling `parent_id`, or comes back to a node already on
-    * it (a parent cycle), leaves out every node on it, as the uncapped
-    * CTE never reaches them. Each node is climbed past once. */
+    * roots (null parent) at 0 — the levels of the README's uncapped
+    * node-tree CTE — by one memoized walk up the parent chains. A chain
+    * that reaches a dangling `parent_id`, or comes back to a node
+    * already on it (a parent cycle), leaves out every node on it, as the
+    * uncapped CTE never reaches them. Each node is climbed past once. */
   def localRootDepths(parents: Iterable[(String, String)]): Map[String, Int] = {
     val parentOf = parents.filter(_._1 != null).toMap
     val out = -1 // the level of a node left out
@@ -141,67 +141,6 @@ object Recursion {
       }
     }
     level.filter(_._2 != out).toMap
-  }
-
-  /** (node, depth) for a forest of `(id, parent_id)` rows, chosen by
-    * size: [[localRootDepths]] over the collected pairs (one job) when
-    * they fit in a broadcast, otherwise [[rootDepths]]. */
-  def treeDepths(parents: DataFrame): DataFrame = {
-    val p = parents.select(col("id"), col("parent_id"))
-    if (!fitsBroadcast(p)) rootDepths(p)
-    else {
-      val spark = p.sparkSession
-      import spark.implicits._
-      val pairs = p.as[(String, String)].collect()
-      localRootDepths(pairs).toSeq.toDF("node", "depth")
-    }
-  }
-
-  /** Distance to the root for every node of a forest given as
-    * `(id, parent_id)` rows, roots having a null `parent_id` — the
-    * levels of an uncapped `WITH RECURSIVE` descent from the roots
-    * (README.md:138-146), by pointer doubling rather than one join per
-    * level. Each pending node holds an (ancestor, distance) pair; every
-    * round replaces its ancestor by that ancestor's own, so the jump
-    * doubles and a chain of depth d settles in about log2(d) rounds. A
-    * node settles when its ancestor has a depth (its depth = distance +
-    * that depth) and drops out when its ancestor is no node at all (a
-    * dangling `parent_id`). While some pending chain still ends at a
-    * root or a dangling parent, every round settles or drops at least
-    * one node; so the loop stops at the first round that changes
-    * nothing, and the nodes still pending, on or under a parent cycle,
-    * are left out, as the CTE leaves them out. Output: (node, depth),
-    * roots at 0; `id` must be unique, as the nodes PK is. */
-  def rootDepths(parents: DataFrame): DataFrame = {
-    val p = parents.select(col("id"), col("parent_id"))
-    var resolved = p.filter(col("parent_id").isNull)
-      .select(col("id").as("node"), lit(0).as("depth"))
-    var pending = p.filter(col("parent_id").isNotNull)
-      .select(col("id").as("node"), col("parent_id").as("anc"),
-        lit(1).as("dist"))
-    var left = Long.MaxValue // pending rows, counted from round one on
-    var progressed = true
-    while (left > 0 && progressed) {
-      // a resolved ancestor ends the walk (no next hop); a pending one
-      // passes on its own ancestor and distance
-      val hop = resolved.select(col("node").as("via"),
-          lit(null).cast("string").as("next"), col("depth").as("d"))
-        .unionAll(pending.select(col("node").as("via"),
-          col("anc").as("next"), col("dist").as("d")))
-      // lazy: the count below is the one action that fills it
-      val step = pending.join(hop, col("anc") === col("via"))
-        .select(col("node"), col("next"), (col("dist") + col("d")).as("dist"))
-        .localCheckpoint(eager = false)
-      resolved = resolved.unionAll(step.filter(col("next").isNull)
-        .select(col("node"), col("dist").as("depth")))
-      pending = step.filter(col("next").isNotNull)
-        .select(col("node"), col("next").as("anc"), col("dist"))
-      // one job; Dataset.count would add a shuffle stage
-      val now = pending.rdd.count()
-      progressed = now < left
-      left = now
-    }
-    resolved
   }
 
   private def expand(edges: DataFrame, seeds: DataFrame, maxDepth: Int,

@@ -324,10 +324,7 @@ class AdapterSpec extends SparkSpec {
     def prows(df: org.apache.spark.sql.DataFrame) =
       df.select($"descendant_id", $"ancestor_id", $"depth", $"path")
         .as[(String, String, Int, String)].collect().toSeq.sorted
-    val paths = pairs.flatMap { case (s, d) =>
-      Recursion.walk(up, s, 1, Recursion.arrow(s, d), 6, prependPath = true)
-        .map { case (a, k, p) => (d, a, k, p) }
-    }
+    val paths = pairs.flatMap { case (s, d) => Recursion.edgePaths(up, s, d, 6) }
     assert(paths.sorted === prows(Recursion.ancestorPaths(edges, 6)))
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.{Converter, GraphTables}
-import graft.queries.{GraphQueries, Recursion}
+import graft.queries.GraphQueries
 
 /** Query-corpus goldens over the sample_library fixture — mirrors
   * test_sql_operations.rb (the reference's de-facto conformance suite)
@@ -349,50 +349,26 @@ class CorpusSpec extends SparkSpec {
       .as[(String, String, String, String, Int)].collect().toSeq
   }
 
-  /** `nodeTree`'s rows, by the driver walk (the branch the fixtures
-    * take by size) or, with `doubling`, by pointer doubling: broadcasts
-    * off for the call put the size estimate over the threshold. */
-  def engineTree(t: GraphTables,
-      doubling: Boolean): Seq[(String, String, String, String, Int)] = {
-    def rows = GraphQueries.nodeTree(t)
-      .as[(String, String, String, String, Int)].collect().toSeq
-    val parents = t.nodes.select($"id", $"parent_id")
-    if (!doubling) {
-      assert(Recursion.fitsBroadcast(parents))
-      rows
-    } else {
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val old = spark.conf.getOption(key)
-      spark.conf.set(key, "-1")
-      try {
-        assert(!Recursion.fitsBroadcast(parents))
-        rows
-      } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
-  }
-
-  val branches = Seq("driver walk" -> false, "pointer doubling" -> true)
+  def engineTree(t: GraphTables): Seq[(String, String, String, String, Int)] =
+    GraphQueries.nodeTree(t).as[(String, String, String, String, Int)]
+      .collect().toSeq
 
   test("node tree has no depth cap: 231 chain levels, O(log depth) jobs") {
     val t = treeTables("deep.xml" -> chainXml(231))
-    branches.foreach { case (branch, doubling) =>
-      val (rows, jobs) = jobsDuring(engineTree(t, doubling))
-      val levels = rows.map(r => r._1 -> r._5).toMap
-      assert(rows.size === 2 * 231, branch)
-      assert((0 until 231).forall(k =>
-        levels(s"c$k") === k && levels(s"l$k") === k + 1), branch)
-      // a join per level would run at least one job per level
-      assert(jobs < 60, s"$branch: $jobs jobs")
-    }
+    val (rows, jobs) = jobsDuring(engineTree(t))
+    val levels = rows.map(r => r._1 -> r._5).toMap
+    assert(rows.size === 2 * 231)
+    assert((0 until 231).forall(k =>
+      levels(s"c$k") === k && levels(s"l$k") === k + 1))
+    // a join per level would run at least one job per level
+    assert(jobs < 60, s"$jobs jobs")
   }
 
   test("node tree equals Spark's WITH RECURSIVE node_tree over 64 levels") {
     val t = treeTables("deep.xml" -> chainXml(64))
     val expected = cteTree(t)
     assert(expected.size === 128)
-    branches.foreach { case (branch, doubling) =>
-      assert(engineTree(t, doubling) === expected, branch)
-    }
+    assert(engineTree(t) === expected)
   }
 
   test("node tree leaves out parent cycles and dangling parents") {
@@ -406,11 +382,9 @@ class CorpusSpec extends SparkSpec {
       .as[(String, Option[String])].collect().toMap
     assert(parents === Map("A" -> Some("B"), "B" -> Some("A"),
       "r" -> None, "b" -> Some("r"), "k" -> Some("a")))
-    val expected = cteTree(t)
-    assert(expected.map(r => r._1 -> r._5) === Seq("r" -> 0, "b" -> 1))
-    branches.foreach { case (branch, doubling) =>
-      assert(engineTree(t, doubling) === expected, branch)
-    }
+    val tree = engineTree(t)
+    assert(tree.map(r => r._1 -> r._5) === Seq("r" -> 0, "b" -> 1))
+    assert(tree === cteTree(t))
   }
 
   test("capped traversals submit at most 4 jobs each") {
