@@ -1,7 +1,6 @@
 package graft
 
-import graft.engine.Converter
-import graft.relationships.{MultiReferenceAdapter, SemanticAdapter}
+import graft.engine.{Converter, GraphTables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -78,13 +77,16 @@ object Main {
     val adapters =
       if (examples) Converter.allAdapters else Converter.coreAdapters
     val parseFailures = spark.sparkContext.longAccumulator("parse_failures")
-    val tables = new Converter(spark, adapters, relationships,
+    GraphTables.unpersist(new Converter(spark, adapters, relationships,
       Some(parseFailures))
-      .convertAndWrite(in, out)
+      .convertAndWrite(in, out))
 
-    // stats printout (main.rb:124-142) — one aggregate pass per table:
-    // documents fold count+MB into a single agg, and the node total is
-    // the sum of the per-type counts (no separate count() scan)
+    // stats printout (main.rb:124-142) from the tables just written: the
+    // converter's edge table is an uncached union, and counting it would
+    // run every adapter again. One aggregate pass per table: documents
+    // fold count+MB into a single agg, and the node total is the sum of
+    // the per-type counts (no separate count() scan)
+    val tables = GraphTables.read(spark, out)
     val docStats = tables.documents
       .agg(count(lit(1)).as("n"),
         round(sum(col("file_size")) / 1048576.0, 2).as("mb"))

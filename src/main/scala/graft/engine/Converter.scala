@@ -46,14 +46,45 @@ final case class GraphTables(documents: DataFrame, nodes: DataFrame,
   /** Persist as partitioned parquet — the columnar replacement for the
     * SQLite file (no sqlite-jdbc resolvable offline; capability, not
     * byte format, is the target — SURVEY.md S6). Nodes cluster by
-    * `node_type` so type-filtered scans prune files at read time. */
+    * `node_type` so type-filtered scans prune files at read time.
+    *
+    *  - Every table is zstd-compressed. The codec is fixed here rather
+    *    than taken from `spark.sql.parquet.compression.codec`, so other
+    *    parquet writes in the session keep the session's codec.
+    *  - Each `cross_references` file is sorted by
+    *    `(source_node_id, target_node_id)` (a sort within partitions, no
+    *    shuffle). The sibling edges of a wide element then sit next to
+    *    each other, and zstd stores them in about half the bytes.
+    *  - The four table writes are submitted at once from a pool of four
+    *    threads created for this call. Fresh threads inherit the
+    *    caller's Spark local properties (job group, scheduler pool), so
+    *    the jobs are charged as if the caller had run them.
+    *  - The call returns only after every write has ended. If any write
+    *    failed it then throws the first failure, in table order; the
+    *    other tables may have been written. */
   def write(outDir: String): Unit = {
-    documents.write.mode("overwrite").parquet(s"$outDir/documents")
-    nodes.write.mode("overwrite").partitionBy("node_type")
-      .parquet(s"$outDir/nodes")
-    properties.write.mode("overwrite").parquet(s"$outDir/node_properties")
-    crossReferences.write.mode("overwrite")
-      .parquet(s"$outDir/cross_references")
+    def parquet(df: DataFrame) =
+      df.write.mode("overwrite").option("compression", "zstd")
+    val writes: Seq[() => Unit] = Seq(
+      () => parquet(documents).parquet(s"$outDir/documents"),
+      () => parquet(nodes).partitionBy("node_type").parquet(s"$outDir/nodes"),
+      () => parquet(properties).parquet(s"$outDir/node_properties"),
+      () => parquet(crossReferences
+          .sortWithinPartitions("source_node_id", "target_node_id"))
+        .parquet(s"$outDir/cross_references"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
+    try {
+      val pending = writes.map(w => pool.submit(new Runnable {
+        def run(): Unit = w()
+      }))
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch {
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+        }
+      }
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
   }
 }
 

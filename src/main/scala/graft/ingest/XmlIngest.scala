@@ -88,7 +88,19 @@ object XmlIngest {
     noExternalEntities(factory.setFeature)
     factory.setAttribute(javax.xml.XMLConstants.ACCESS_EXTERNAL_DTD, "")
     factory.setAttribute(javax.xml.XMLConstants.ACCESS_EXTERNAL_SCHEMA, "")
-    factory.newDocumentBuilder()
+    val builder = factory.newDocumentBuilder()
+    builder.setErrorHandler(QuietErrors)
+    builder
+  }
+
+  /** The DOM parse's error handler. Without one the parser prints
+    * `[Fatal Error] :line:col: …` to stderr for every malformed file.
+    * A fatal error still throws, so the salvage parse runs; recoverable
+    * errors and warnings are dropped. */
+  private object QuietErrors extends org.xml.sax.ErrorHandler {
+    def warning(e: org.xml.sax.SAXParseException): Unit = ()
+    def error(e: org.xml.sax.SAXParseException): Unit = ()
+    def fatalError(e: org.xml.sax.SAXParseException): Unit = throw e
   }
 
   /** Turns off everything that reads outside the file: the external DTD

@@ -184,6 +184,18 @@ class IngestSpec extends SparkSpec {
       .exists(_.startsWith("kept text")))
   }
 
+  test("a truncated file is salvaged without printing parser errors") {
+    val bytes = "<root id=\"r\"><item id=\"a\">kept<item id=\"b\">tail"
+      .getBytes(UTF_8)
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val p = try XmlIngest.parseOne("/tmp/cut.xml", bytes.length.toLong, bytes)
+      finally System.setErr(saved)
+    assert(p.get.nodes.map(_.id) === Seq("r", "a", "b"))
+    assert(err.toString("UTF-8") === "")
+  }
+
   test("large document: 1001 nodes, 1000 properties (:130-152)") {
     val items = (1 to 1000)
       .map(i => s"""<item id="item_$i" value="$i">Content $i</item>""")

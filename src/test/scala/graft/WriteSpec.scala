@@ -75,6 +75,94 @@ class WriteSpec extends SparkSpec {
     assert(e.getMessage.contains(xrefs.getPath), e.getMessage)
   }
 
+  /** The parquet part files of each table of a database, by table. */
+  def partFiles(dir: String): Map[String, Seq[java.nio.file.Path]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    Files.walk(root).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      .groupBy(p => root.relativize(p).getName(0).toString)
+  }
+
+  test("every table is written with zstd column chunks") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = partFiles(db)
+    assert(files.keySet ===
+      Set("documents", "nodes", "node_properties", "cross_references"))
+    files.foreach { case (table, paths) =>
+      val codecs = paths.flatMap { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toUri), conf))
+        try r.getFooter.getBlocks.asScala.toSeq
+          .flatMap(_.getColumns.asScala.map(_.getCodec))
+        finally r.close()
+      }
+      assert(codecs.nonEmpty, table)
+      assert(codecs.toSet === Set(CompressionCodecName.ZSTD), table)
+    }
+  }
+
+  test("each cross_references file is ordered by source, then target") {
+    val files = partFiles(db)("cross_references")
+    val edges = files.map { p =>
+      spark.read.parquet(p.toString)
+        .select($"source_node_id", $"target_node_id")
+        .as[(Option[String], Option[String])].collect().toSeq
+    }
+    assert(edges.exists(_.size > 1))
+    edges.foreach(e => assert(e === e.sorted, e))
+    assert(edges.map(_.size).sum ===
+      GraphTables.read(spark, db).crossReferences.count())
+  }
+
+  test("a failed table write is rethrown after every other write ended") {
+    val t = new Converter(spark, Converter.coreAdapters).convert(fixturesDir)
+    val boom = udf((s: String) =>
+      if (s != null) throw new IllegalStateException("edge frame boom")
+      else s)
+    val broken = t.copy(crossReferences = t.crossReferences
+      .withColumn("source_node_id", boom($"source_node_id")))
+    val out = Files.createTempDirectory("graft-write-fail").toString
+    val e = intercept[Exception](broken.write(out))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(c => Option(c.getMessage)
+      .exists(_.contains("edge frame boom"))), e)
+    // the other three writes committed before write returned
+    for (table <- Seq("documents", "nodes", "node_properties"))
+      assert(new java.io.File(s"$out/$table/_SUCCESS").exists(), table)
+    // job-end events reach the status store asynchronously
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(tracker.getActiveJobIds.isEmpty)
+    GraphTables.unpersist(t)
+  }
+
+  test("GraphTables.read lists 41 node types in at most one job") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // the nodes listing runs as a Spark job
+    val in = Files.createTempDirectory("graft-types")
+    val kids = (1 to 40).map(i => s"""<t$i id="n$i">v$i</t$i>""").mkString
+    Files.write(in.resolve("types.xml"),
+      s"""<root id="n0">$kids</root>""".getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft-types-db").toString
+    GraphTables.unpersist(new Converter(spark, Converter.coreAdapters)
+      .convertAndWrite(in.toString, out))
+    assert(new java.io.File(s"$out/nodes").list()
+      .count(_.startsWith("node_type=")) === 41)
+    val (back, jobs) = jobsDuring(GraphTables.read(spark, out))
+    assert(jobs <= 1)
+    val rows = back.nodes.select($"id", $"node_type").as[(String, String)]
+      .collect().toSet
+    assert(rows === ((1 to 40).map(i => s"n$i" -> s"t$i").toSet +
+      ("n0" -> "root")))
+  }
+
   test("node types that parse as doubles read back as strings") {
     // inference types a partition column whose every value parses as a
     // double (`node_type=NaN`, `node_type=Infinity`) as DoubleType
