@@ -21,7 +21,7 @@ object TypeInference {
   private val DateRe = "^\\d{4}-\\d{2}-\\d{2}".r
   private val TimeRe = "^\\d{2}:\\d{2}:\\d{2}".r
 
-  /** Pure Scala mirror of [[inferTypeCol]]; used by the DOM extractor
+  /** Pure Scala mirror of [[inferTypeCol]]; used by the SAX extractor
     * (one value at a time, exactly like the reference) and by
     * ScalaCheck property tests. */
   def inferType(value: String): String = value match {

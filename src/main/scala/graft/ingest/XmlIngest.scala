@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayInputStream
-import javax.xml.parsers.DocumentBuilderFactory
-import org.w3c.dom.{Element, Node => DomNode}
+import javax.xml.parsers.{SAXParser, SAXParserFactory}
+import org.xml.sax.Attributes
+import org.xml.sax.helpers.DefaultHandler
 import scala.collection.mutable
 
 /** XML corpus → (documents, nodes, node_properties) DataFrames.
@@ -14,11 +15,11 @@ import scala.collection.mutable
   * Distributed re-expression of the reference's ingest pipeline
   * (/root/reference/main.rb:61-82, lib/document_parser.rb): instead of a
   * fiber producer/consumer feeding a single SQLite writer, every file is
-  * parsed as one row of Spark's `binaryFile` source and DOM-walked inside
-  * `mapPartitions`; the per-document node/property sequences are exploded
-  * into columnar tables and duplicate keys resolved with a deterministic
-  * last-write-wins window (the reference's `INSERT OR REPLACE`,
-  * database_writer.rb:46-61). At cluster scale each file is an
+  * parsed as one row of Spark's `binaryFile` source, in one SAX pass
+  * inside `mapPartitions`; the per-document node/property sequences are
+  * exploded into columnar tables and duplicate keys resolved with a
+  * deterministic last-write-wins aggregate (the reference's `INSERT OR
+  * REPLACE`, database_writer.rb:46-61). At cluster scale each file is an
   * independent task input — no shared writer, no queue, no transaction
   * machinery; the atomic Spark job commit replaces batch commits.
   *
@@ -28,20 +29,21 @@ import scala.collection.mutable
   *    `Node#name` / `#attributes` behavior, asserted in
   *    test_edge_cases.rb:177-199);
   *  - `content` concatenates descendant text with whitespace-only text
-  *    nodes dropped (the `noblanks` parse, :13), then strips;
+  *    nodes dropped (the `noblanks` parse, :13), then strips; a text
+  *    node ends at a tag or a processing instruction, not at a comment;
   *  - `xpath` carries positional predicates only where same-named
   *    siblings exist (libxml2 `Node#path`, test_basic_functionality
   *    .rb:137-146 asserts the index-free form);
   *  - `position` is the element's 0-based index among *element*
-  *    siblings (:70-75);
+  *    siblings (:70-75), `parent_id` the immediate parent's id;
   *  - entity references are decoded and CDATA coalesced into text
   *    (test_edge_cases.rb:58-79,201-221); comments and processing
   *    instructions contribute nothing (:223-261);
-  *  - malformed files are salvaged to their parseable prefix with
-  *    open elements auto-closed (the reference's recovering-Nokogiri
-  *    behavior, test_edge_cases.rb:154-175); files with no salvageable
-  *    root yield zero rows and never fail the job
-  *    (async_processor.rb:58-64).
+  *  - a malformed file keeps everything before its first fatal error,
+  *    with open elements auto-closed (the reference's recovering-Nokogiri
+  *    behavior, test_edge_cases.rb:154-175); a file whose root element
+  *    never opened, or that nests deeper than [[MaxDepth]], yields zero
+  *    rows and never fails the job (async_processor.rb:58-64).
   */
 object XmlIngest {
 
@@ -68,121 +70,45 @@ object XmlIngest {
       .select("path", "length", "content")
       .as[(String, Long, Array[Byte])]
       .mapPartitions { files =>
-        // builder constructed once per partition and reset per file —
-        // factory SPI lookup stays off the per-file hot path
-        val builder = newBuilder()
+        val parser = newParser()
         files.flatMap { case (rawPath, length, bytes) =>
-          builder.reset()
-          val parsed = parseOne(rawPath, length, bytes, builder)
+          val parsed = parseOne(rawPath, length, bytes, parser)
           if (parsed.isEmpty) failures.foreach(_.add(1L))
           parsed
         }
       }
   }
 
-  private def newBuilder(): javax.xml.parsers.DocumentBuilder = {
-    val factory = DocumentBuilderFactory.newInstance()
+  /** The ingest parser: SAX, namespace-unaware, reading nothing outside
+    * the file. The external DTD and external general and parameter
+    * entities are off, and `ACCESS_EXTERNAL_*` is empty:
+    * `load-external-dtd` alone still resolves `<!ENTITY x SYSTEM
+    * "file:…">`, which would put a local file's bytes into
+    * `nodes.content`; the reference's Nokogiri default does not
+    * substitute external entities either. Build one per partition, not
+    * per file: the factory's SPI lookup is the costly part. */
+  def newParser(): SAXParser = {
+    val factory = SAXParserFactory.newInstance()
     factory.setNamespaceAware(false)
-    factory.setCoalescing(true)
-    factory.setIgnoringComments(true)
-    noExternalEntities(factory.setFeature)
-    factory.setAttribute(javax.xml.XMLConstants.ACCESS_EXTERNAL_DTD, "")
-    factory.setAttribute(javax.xml.XMLConstants.ACCESS_EXTERNAL_SCHEMA, "")
-    val builder = factory.newDocumentBuilder()
-    builder.setErrorHandler(QuietErrors)
-    builder
-  }
-
-  /** The DOM parse's error handler. Without one the parser prints
-    * `[Fatal Error] :line:col: …` to stderr for every malformed file.
-    * A fatal error still throws, so the salvage parse runs; recoverable
-    * errors and warnings are dropped. */
-  private object QuietErrors extends org.xml.sax.ErrorHandler {
-    def warning(e: org.xml.sax.SAXParseException): Unit = ()
-    def error(e: org.xml.sax.SAXParseException): Unit = ()
-    def fatalError(e: org.xml.sax.SAXParseException): Unit = throw e
-  }
-
-  /** Turns off everything that reads outside the file: the external DTD
-    * and external general and parameter entities. `load-external-dtd`
-    * alone still resolves `<!ENTITY x SYSTEM "file:…">`, which would put
-    * a local file's bytes into `nodes.content`; the reference's Nokogiri
-    * default does not substitute external entities either. */
-  private def noExternalEntities(set: (String, Boolean) => Unit): Unit = {
-    set("http://apache.org/xml/features/nonvalidating/load-external-dtd",
-      false)
-    set("http://xml.org/sax/features/external-general-entities", false)
-    set("http://xml.org/sax/features/external-parameter-entities", false)
-  }
-
-  /** Reconstruct the parseable prefix of a malformed file as a DOM
-    * document: replay SAX events into a DOM tree until the first fatal
-    * error, leaving any still-open elements implicitly auto-closed —
-    * the same shape libxml2's recovering parser (the reference's
-    * default Nokogiri mode, document_parser.rb:13) produces for
-    * truncated/unclosed markup, e.g. test_edge_cases.rb:154-175's
-    * fixture where unclosed `<item>`s nest and survive. Elements are
-    * attached to their parent at start-tag time, so everything seen
-    * before the error is kept. Returns None when no root element was
-    * ever started (nothing to salvage — the reference also skips such
-    * files: a recovered empty document has a nil root and its parse
-    * raises in the node walk, async_processor.rb:58-64). */
-  private def salvageParse(bytes: Array[Byte],
-      builder: javax.xml.parsers.DocumentBuilder)
-      : Option[org.w3c.dom.Document] = {
-    val doc = builder.newDocument()
-    val factory = javax.xml.parsers.SAXParserFactory.newInstance()
-    factory.setNamespaceAware(false)
-    noExternalEntities(factory.setFeature)
+    Seq("http://apache.org/xml/features/nonvalidating/load-external-dtd",
+      "http://xml.org/sax/features/external-general-entities",
+      "http://xml.org/sax/features/external-parameter-entities")
+      .foreach(factory.setFeature(_, false))
     val parser = factory.newSAXParser()
     parser.setProperty(javax.xml.XMLConstants.ACCESS_EXTERNAL_DTD, "")
     parser.setProperty(javax.xml.XMLConstants.ACCESS_EXTERNAL_SCHEMA, "")
-    val handler = new org.xml.sax.helpers.DefaultHandler {
-      private var stack: List[Element] = Nil
-      private val text = new StringBuilder
-      // Coalesce consecutive character chunks into one text node so a
-      // chunk boundary can never split a run of text in a way that
-      // changes the whitespace-only drop decision downstream.
-      private def flushText(): Unit =
-        if (text.nonEmpty) {
-          stack.headOption
-            .foreach(_.appendChild(doc.createTextNode(text.toString)))
-          text.clear()
-        }
-      override def startElement(uri: String, local: String, qname: String,
-          attrs: org.xml.sax.Attributes): Unit = {
-        flushText()
-        val e = doc.createElement(qname)
-        var i = 0
-        while (i < attrs.getLength) {
-          e.setAttribute(attrs.getQName(i), attrs.getValue(i))
-          i += 1
-        }
-        stack match {
-          case p :: _ => p.appendChild(e)
-          case Nil if doc.getDocumentElement == null => doc.appendChild(e)
-          case Nil => () // stray second root: unattached, never walked
-        }
-        stack = e :: stack
-      }
-      override def endElement(uri: String, local: String,
-          qname: String): Unit = {
-        flushText()
-        stack = stack.drop(1)
-      }
-      override def characters(ch: Array[Char], start: Int,
-          len: Int): Unit = { text.appendAll(ch, start, len); () }
-      override def error(
-          e: org.xml.sax.SAXParseException): Unit = () // recoverable
-      def finish(): Unit = flushText() // pending text at the fatal stop
-    }
-    try parser.parse(new ByteArrayInputStream(bytes), handler)
-    catch {
-      case _: org.xml.sax.SAXException | _: java.io.IOException => ()
-    }
-    handler.finish()
-    Option(doc.getDocumentElement).map(_ => doc)
+    parser
   }
+
+  /** Deepest element nesting a file may have, counting every element,
+    * with or without an id; a deeper file yields zero rows. Every node
+    * repeats its ancestors' xpath and its descendants' text, so a file's
+    * output grows with the square of its depth. A fixed bound also
+    * makes the skip decision the same on every thread and JVM. */
+  private val MaxDepth = 1024
+
+  /** Abandons a file nested deeper than [[MaxDepth]]. */
+  private object TooDeep extends RuntimeException(null, null, false, false)
 
   /** md5 of the raw file bytes as lowercase hex — fills the reference
     * schema's `file_hash` column (001_create_base_schema.rb:14), which
@@ -195,115 +121,155 @@ object XmlIngest {
     sb.result()
   }
 
-  /** Parse one file; falls back to [[salvageParse]] on strict-parse
-    * failure (error-tolerant source S5 + the reference's "process what
-    * it can" recovery, test_edge_cases.rb:154-175), and None when
-    * nothing at all is salvageable. */
+  private def localName(qname: String): String = {
+    val i = qname.indexOf(':')
+    if (i >= 0) qname.substring(i + 1) else qname
+  }
+
+  /** One element of the file being parsed. `textStart` is the length of
+    * the file's text buffer at its start tag, so its content is the
+    * buffer from there to its end tag. */
+  private final class Elem(val parent: Elem, val qname: String,
+      val id: String, val position: Int, val occurrence: Int,
+      val textStart: Int) {
+    var children = 0
+    var content: String = _
+    private var names: mutable.HashMap[String, Int] = _
+    private var path: String = _
+
+    /** Counts a new child named `qname`; returns its occurrence number
+      * among its same-named siblings. */
+    def adopt(qname: String): Int = {
+      children += 1
+      if (names == null) names = mutable.HashMap.empty
+      val n = names.getOrElse(qname, 0) + 1
+      names(qname) = n
+      n
+    }
+
+    /** libxml2's `Node#path`: a `[n]` predicate only where the parent
+      * has more than one child of this name, so it is read after the
+      * parse, when every count is final. */
+    def xpath: String = {
+      if (path == null) path =
+        if (parent == null) s"/$qname"
+        else if (parent.names(qname) > 1)
+          s"${parent.xpath}/$qname[$occurrence]"
+        else s"${parent.xpath}/$qname"
+      path
+    }
+  }
+
+  /** The single pass over one file. Id-bearing elements are kept in
+    * start-tag order with their properties; a property list is sorted by
+    * qualified name, which decides which of two attributes with one
+    * local name (`p:m`, `q:m`) survives the dedup in [[tables]]. */
+  private final class Handler(docId: String) extends DefaultHandler {
+    var root: Elem = _
+    val nodes = mutable.ArrayBuffer.empty[Elem]
+    val props = mutable.ArrayBuffer.empty[RawProperty]
+    private var open: Elem = _
+    private var depth = 0
+    private val text = new java.lang.StringBuilder
+    private val run = new java.lang.StringBuilder
+
+    /** Ends the pending text run; a run that is all whitespace is
+      * dropped (the `noblanks` parse). */
+    private def flush(): Unit = {
+      var i = 0
+      while (i < run.length && run.charAt(i) <= ' ') i += 1
+      if (i < run.length) text.append(run)
+      run.setLength(0)
+    }
+
+    private def close(): Unit = {
+      if (open.id != null) open.content = text.substring(open.textStart).trim
+      open = open.parent
+      depth -= 1
+    }
+
+    /** Closes the elements still open at the end of input or at the
+      * first fatal error. */
+    def finish(): Unit = {
+      flush()
+      while (open != null) close()
+    }
+
+    override def startElement(uri: String, local: String, qname: String,
+        attrs: Attributes): Unit = {
+      flush()
+      depth += 1
+      if (depth > MaxDepth) throw TooDeep
+      val id = attrs.getValue("id")
+      val e =
+        if (open == null) new Elem(null, qname, id, 0, 1, text.length)
+        else {
+          val position = open.children
+          new Elem(open, qname, id, position, open.adopt(qname), text.length)
+        }
+      if (id != null) {
+        val ordinal = nodes.length.toLong
+        nodes += e
+        (0 until attrs.getLength)
+          .map(i => attrs.getQName(i) -> attrs.getValue(i))
+          .sortBy(_._1)
+          .foreach { case (q, v) =>
+            val name = localName(q)
+            if (name != "id") props += RawProperty(id, name, v,
+              TypeInference.inferType(v), docId, ordinal)
+          }
+      }
+      if (root == null) root = e
+      open = e
+    }
+
+    override def endElement(uri: String, local: String,
+        qname: String): Unit = { flush(); close() }
+
+    override def characters(ch: Array[Char], start: Int, len: Int): Unit =
+      { run.append(ch, start, len); () }
+
+    override def processingInstruction(target: String, data: String): Unit =
+      flush()
+  }
+
+  /** Parse one file with a fresh parser; see the four-argument form. */
   def parseOne(rawPath: String, length: Long,
       bytes: Array[Byte]): Option[ParsedDocument] =
-    parseOne(rawPath, length, bytes, newBuilder())
+    parseOne(rawPath, length, bytes, newParser())
 
+  /** Parse one file in one SAX pass with `parser` (from [[newParser]]).
+    * At the first fatal error the pass stops and keeps what it has,
+    * closing the elements still open (error-tolerant source S5 + the
+    * reference's "process what it can" recovery, test_edge_cases.rb
+    * :154-175). None when no root element ever opened, when the file
+    * nests deeper than [[MaxDepth]], or when the parser fails otherwise:
+    * the document row is then absent, like a file whose parse raised
+    * before any rows were enqueued. */
   def parseOne(rawPath: String, length: Long, bytes: Array[Byte],
-      builder: javax.xml.parsers.DocumentBuilder): Option[ParsedDocument] = {
+      parser: SAXParser): Option[ParsedDocument] = {
     val path = if (rawPath.startsWith("file:")) rawPath.stripPrefix("file:")
       else rawPath
     val base = path.substring(path.lastIndexOf('/') + 1)
     val docId = if (base.endsWith(".xml")) base.dropRight(4) else base
     try {
-      val dom =
-        try builder.parse(new ByteArrayInputStream(bytes))
-        catch {
-          case _: org.xml.sax.SAXException =>
-            salvageParse(bytes, builder).orNull
-        }
-      if (dom == null) return None
-      val nodes = mutable.ArrayBuffer.empty[RawNode]
-      val props = mutable.ArrayBuffer.empty[RawProperty]
-      var ordinal = 0L
-
-      def localName(qname: String): String = {
-        val i = qname.indexOf(':')
-        if (i >= 0) qname.substring(i + 1) else qname
+      parser.reset()
+      val h = new Handler(docId)
+      try parser.parse(new ByteArrayInputStream(bytes), h)
+      catch {
+        case _: org.xml.sax.SAXException | _: java.io.IOException => ()
       }
-
-      // Descendant text with whitespace-only text nodes dropped, the
-      // `noblanks` + `element.text` combination (document_parser.rb:13,48).
-      def collectText(e: Element, sb: StringBuilder): Unit = {
-        var c = e.getFirstChild
-        while (c != null) {
-          c.getNodeType match {
-            case DomNode.TEXT_NODE | DomNode.CDATA_SECTION_NODE =>
-              val v = c.getNodeValue
-              if (v != null && v.trim.nonEmpty) sb.append(v)
-            case DomNode.ELEMENT_NODE =>
-              collectText(c.asInstanceOf[Element], sb)
-            case _ => ()
-          }
-          c = c.getNextSibling
+      h.finish()
+      Option(h.root).map { _ =>
+        val nodes = h.nodes.toSeq.zipWithIndex.map { case (e, ordinal) =>
+          RawNode(e.id, localName(e.qname), docId,
+            Option(e.parent).flatMap(p => Option(p.id)), e.position,
+            Some(e.content), e.xpath, ordinal.toLong)
         }
+        ParsedDocument(DocumentRow(docId, path, md5Hex(bytes), length),
+          nodes, h.props.toSeq)
       }
-
-      def elementChildren(e: DomNode): Vector[Element] = {
-        val buf = Vector.newBuilder[Element]
-        var c = e.getFirstChild
-        while (c != null) {
-          if (c.getNodeType == DomNode.ELEMENT_NODE)
-            buf += c.asInstanceOf[Element]
-          c = c.getNextSibling
-        }
-        buf.result()
-      }
-
-      def walk(e: Element, parent: Option[Element], xpath: String,
-          position: Int): Unit = {
-        if (e.hasAttribute("id")) {
-          val id = e.getAttribute("id")
-          val parentId = parent.filter(_.hasAttribute("id"))
-            .map(_.getAttribute("id"))
-          val sb = new StringBuilder
-          collectText(e, sb)
-          nodes += RawNode(id, localName(e.getNodeName), docId, parentId,
-            position, Some(sb.result().trim), xpath, ordinal)
-          val attrs = e.getAttributes
-          var i = 0
-          while (i < attrs.getLength) {
-            val a = attrs.item(i)
-            val name = localName(a.getNodeName)
-            if (name != "id")
-              props += RawProperty(id, name, a.getNodeValue,
-                TypeInference.inferType(a.getNodeValue), docId, ordinal)
-            i += 1
-          }
-          ordinal += 1
-        }
-        val children = elementChildren(e)
-        // Positional xpath predicates only where a name is ambiguous
-        // among siblings (libxml2 path format).
-        val nameTotals = children.groupBy(_.getNodeName).map {
-          case (n, cs) => n -> cs.size
-        }
-        val nameSeen = mutable.Map.empty[String, Int].withDefaultValue(0)
-        children.zipWithIndex.foreach { case (child, idx) =>
-          val qn = child.getNodeName
-          val occ = nameSeen(qn) + 1
-          nameSeen(qn) = occ
-          val seg = if (nameTotals(qn) > 1) s"$qn[$occ]" else qn
-          walk(child, Some(e), s"$xpath/$seg", idx)
-        }
-      }
-
-      val root = dom.getDocumentElement
-      if (root != null) walk(root, None, s"/${root.getNodeName}", 0)
-      Some(ParsedDocument(DocumentRow(docId, path, md5Hex(bytes), length),
-        nodes.toSeq, props.toSeq))
-    } catch {
-      // StackOverflowError included: pathological nesting depth must
-      // skip the file, not abort the job (the documented S5 contract)
-      case _: Exception | _: StackOverflowError =>
-        // Malformed file: keep the document row absent entirely, like a
-        // file whose parse raised before any rows were enqueued.
-        None
-    }
+    } catch { case _: Exception => None }
   }
 
   /** Exploded + deduplicated public tables; `caches` holds the parse
@@ -318,7 +284,7 @@ object XmlIngest {
   def tables(parsedInput: Dataset[ParsedDocument]): XmlTables = {
     val spark = parsedInput.sparkSession
     import spark.implicits._
-    // Three tables derive from one parse — cache the IR so the DOM walk
+    // Three tables derive from one parse — cache the IR so the parse
     // runs once per file, not once per output table. The cache goes out
     // with the tables (XmlTables.caches), so their owner can release it.
     val parsed = parsedInput.cache()
@@ -385,9 +351,10 @@ object XmlIngest {
     * `format("xml")` mapping): one row per `<rowTag>` element, nested
     * children as struct/array columns, attributes `_`-prefixed. Right
     * when a corpus slice is homogeneous and column-shaped queries are
-    * wanted directly; the DOM path remains the semantics-exact route to
-    * the property-graph tables. Schema inference scans the data once —
-    * pass `schema` to skip that at scale. */
+    * wanted directly; the SAX pass of [[parse]] remains the
+    * semantics-exact route to the property-graph tables. Schema
+    * inference scans the data once — pass `schema` to skip that at
+    * scale. */
   def widenedRead(spark: SparkSession, inputDir: String, rowTag: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {

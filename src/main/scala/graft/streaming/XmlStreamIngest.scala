@@ -27,7 +27,7 @@ object XmlStreamIngest {
   /** Streaming per-file parse: one [[ParsedDocument]] per discovered
     * file. The file stream source is used only for *discovery* (one
     * wholetext row per new file); the task then re-reads the raw bytes
-    * from the filesystem so the DOM parser sees the original encoding
+    * from the filesystem so the parser sees the original encoding
     * (a UTF-16 or latin-1 file would be mangled by the text source's
     * UTF-8 decode) and the recorded file size is the true byte length —
     * identical semantics to the batch binaryFile path. */
@@ -42,6 +42,7 @@ object XmlStreamIngest {
       .select(input_file_name().as("path"))
       .as[String]
       .mapPartitions { paths =>
+        val parser = XmlIngest.newParser()
         paths.flatMap { rawUri =>
           try {
             // input_file_name() is percent-encoded — decode via URI so
@@ -58,7 +59,7 @@ object XmlStreamIngest {
               while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
               buf.toByteArray
             } finally in.close()
-            XmlIngest.parseOne(p.toUri.getPath, len, bytes)
+            XmlIngest.parseOne(p.toUri.getPath, len, bytes, parser)
           } catch { case _: Exception => None }
         }
       }

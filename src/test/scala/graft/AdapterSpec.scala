@@ -17,7 +17,7 @@ class AdapterSpec extends SparkSpec {
   /** Write an inline XML corpus to a temp dir and convert it. */
   private def convert(adapters: Seq[RelationshipAdapter],
       files: (String, String)*) = {
-    val dir = Files.createTempDirectory("graft-adapter").toFile
+    val dir = tempDir("graft-adapter").toFile
     files.foreach { case (name, xml) =>
       Files.write(new java.io.File(dir, name).toPath, xml.getBytes(UTF_8))
     }
@@ -254,7 +254,7 @@ class AdapterSpec extends SparkSpec {
   test("relationship detection disabled → zero edges (:252-269)") {
     val xml =
       """<?xml version="1.0"?><root id="root_node"><child id="child_1">Content</child></root>"""
-    val dir = Files.createTempDirectory("graft-disabled").toFile
+    val dir = tempDir("graft-disabled").toFile
     Files.write(new java.io.File(dir, "d.xml").toPath, xml.getBytes(UTF_8))
     val t = new Converter(spark, detectRelationships = false)
       .convert(dir.getAbsolutePath)

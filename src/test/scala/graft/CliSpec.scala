@@ -12,14 +12,14 @@ class CliSpec extends SparkSpec {
 
   test("graft.Main -i fixtures -o tmp --examples: stats + skip line") {
     spark // force session init so Main sees it as pre-existing
-    val in = Files.createTempDirectory("graft-cli-in")
+    val in = tempDir("graft-cli-in")
     for (f <- Seq("simple.xml", "sample_library.xml"))
       Files.copy(Paths.get(s"$fixturesDir/$f"), in.resolve(f),
         StandardCopyOption.REPLACE_EXISTING)
     // one file with no parseable prefix at all → the skipped counter
     Files.write(in.resolve("broken.xml"),
       "<<< this is not xml at all".getBytes("UTF-8"))
-    val out = Files.createTempDirectory("graft-cli-out").toString
+    val out = tempDir("graft-cli-out").toString
 
     val captured = new ByteArrayOutputStream()
     Console.withOut(captured) {

@@ -320,7 +320,7 @@ class CorpusSpec extends SparkSpec {
   /** Tables of an XML directory written from `files` (name → text),
     * relationship detection off: `nodeTree` reads `nodes` only. */
   def treeTables(files: (String, String)*): GraphTables = {
-    val in = java.nio.file.Files.createTempDirectory("graft-tree")
+    val in = tempDir("graft-tree")
     files.foreach { case (name, xml) =>
       java.nio.file.Files.write(in.resolve(name), xml.getBytes("UTF-8"))
     }

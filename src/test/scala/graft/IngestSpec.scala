@@ -1,7 +1,7 @@
 package graft
 
 import graft.ingest.{TypeInference, XmlIngest}
-import org.scalacheck.{Prop, Test => SCTest}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
@@ -9,6 +9,7 @@ import java.nio.file.{Files, Paths}
 /** Ingest goldens mirrored from the reference's Minitest suites
   * (test_basic_functionality.rb, test_edge_cases.rb) — cites inline. */
 class IngestSpec extends SparkSpec {
+  import IngestSpec.Tree
 
   private def parseString(name: String, xml: String) = {
     val bytes = xml.getBytes(UTF_8)
@@ -236,17 +237,108 @@ class IngestSpec extends SparkSpec {
       prop).passed)
   }
 
-  test("pathologically deep nesting skips the file instead of failing") {
-    val depth = 60000
+  // --- generated trees (scalacheck) ---
+
+  private def genTree(depth: Int): Gen[Tree] = for {
+    name <- Gen.oneOf("a", "b", "p:c")
+    hasId <- Gen.prob(0.7)
+    n <- Gen.choose(0, if (depth >= 4) 0 else 4)
+    kids <- Gen.listOfN(n, Gen.frequency(
+      1 -> Gen.oneOf("t", " \n ", "x &amp; y").map(Left(_)),
+      2 -> Gen.lzy(genTree(depth + 1)).map(Right(_))))
+  } yield Tree(name, hasId, kids)
+
+  /** The tree as XML with ids `n1, n2, …` in document order, and the
+    * rows the parse must give: (id, parent_id, position, xpath). */
+  private def render(t: Tree)
+      : (String, Seq[(String, Option[String], Int, String)]) = {
+    val sb = new StringBuilder
+    val rows = Seq.newBuilder[(String, Option[String], Int, String)]
+    var ids = 0
+    def go(t: Tree, parentId: Option[String], position: Int,
+        xpath: String): Unit = {
+      val id = if (t.hasId) { ids += 1; Some(s"n$ids") } else None
+      sb.append('<').append(t.name)
+      id.foreach(i => sb.append(s""" id="$i""""))
+      sb.append('>')
+      id.foreach(i => rows += ((i, parentId, position, xpath)))
+      val elems = t.kids.collect { case Right(c) => c }
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      var elementIndex = 0
+      t.kids.foreach {
+        case Left(text) => sb.append(text)
+        case Right(c) =>
+          val occ = seen.getOrElse(c.name, 0) + 1
+          seen(c.name) = occ
+          val seg = if (elems.count(_.name == c.name) > 1) s"${c.name}[$occ]"
+            else c.name
+          go(c, id, elementIndex, s"$xpath/$seg")
+          elementIndex += 1
+      }
+      sb.append("</").append(t.name).append('>')
+    }
+    go(t, None, 0, s"/${t.name}")
+    (sb.toString, rows.result())
+  }
+
+  test("generated trees: ids once, immediate parent, sibling position, xpath predicates") {
+    val prop = Prop.forAll(genTree(0)) { t =>
+      val (xml, expected) = render(t)
+      val got = parseString("gen.xml", xml).get.nodes
+        .map(n => (n.id, n.parent_id, n.position, n.xpath))
+      got === expected
+    }
+    assert(SCTest.check(SCTest.Parameters.default, prop).passed)
+  }
+
+  test("generated trees: every truncation parses to a subset of the ids") {
+    val parser = XmlIngest.newParser()
+    val prop = Prop.forAll(genTree(0)) { t =>
+      val bytes = render(t)._1.getBytes(UTF_8)
+      val full = XmlIngest.parseOne("/tmp/gen.xml", bytes.length.toLong,
+        bytes, parser).get.nodes.map(_.id).toSet
+      (0 until bytes.length).forall { cut =>
+        val prefix = bytes.take(cut)
+        XmlIngest.parseOne("/tmp/gen.xml", cut.toLong, prefix, parser)
+          .forall(_.nodes.map(_.id).toSet.subsetOf(full))
+      }
+    }
+    assert(SCTest.check(SCTest.Parameters.default, prop).passed)
+  }
+
+  private def chain(depth: Int, id: Int => String): String = {
     val sb = new StringBuilder("""<?xml version="1.0"?>""")
-    (0 until depth).foreach(i => sb.append(s"<n id='d$i'>"))
+    (0 until depth).foreach(i => sb.append(s"<n${id(i)}>"))
     sb.append("x")
     (0 until depth).foreach(_ => sb.append("</n>"))
-    val p = parseString("deep.xml", sb.toString)
-    // either the parser handles it or the walk overflows — both must
-    // degrade to a skipped file or a parsed document, never a thrown
-    // Error (the S5 contract after the StackOverflowError fix)
-    assert(p.isEmpty || p.get.nodes.length === depth)
+    sb.toString
+  }
+
+  test("pathologically deep nesting skips the file instead of failing") {
+    // the parse stops at the depth bound, so a 60000-level file costs
+    // no more than a 1025-level one
+    assert(parseString("deep.xml", chain(60000, i => s" id='d$i'")).isEmpty)
+  }
+
+  test("nesting is bounded at 1024 levels, counting every element") {
+    val deepest = parseString("d1024.xml", chain(1024, i => s" id='d$i'")).get
+    assert(deepest.nodes.length === 1024)
+    assert(deepest.nodes.last.parent_id === Some("d1022"))
+    assert(deepest.nodes.last.content === Some("x"))
+    assert(parseString("d1025.xml", chain(1025, i => s" id='d$i'")).isEmpty)
+    // no-id wrappers count too: one id element over 2000 bare levels
+    assert(parseString("wrapped.xml",
+      chain(2001, i => if (i == 0) " id='top'" else "")).isEmpty)
+  }
+
+  test("strict and salvaged parses agree on text around processing instructions") {
+    // a whitespace run between two processing instructions is its own
+    // text node and dropped, whether or not a fatal error follows
+    val doc = "<r id='r'>a<?p?> \n <?q?>b</r>"
+    Seq(doc, doc + "<").foreach { xml =>
+      assert(parseString("pi.xml", xml).get.nodes.map(_.content) ===
+        Seq(Some("ab")), xml)
+    }
   }
 
   test("encoded documents honor their XML declaration (UTF-16)") {
@@ -306,13 +398,13 @@ class IngestSpec extends SparkSpec {
 
   test("external entities are never read into the tables") {
     // a local file the XML names through a SYSTEM entity: once in a
-    // well-formed file (the DOM parse) and once in a truncated one (the
-    // SAX salvage parse), and once through a parameter entity
+    // well-formed file, once in a truncated one (whose parse stops at the
+    // cut), and once through a parameter entity
     val marker = "SECRET_MARKER_4f1c"
-    val secret = Files.createTempFile("graft-secret", ".txt")
+    val secret = tempFile("graft-secret", ".txt")
     Files.write(secret, marker.getBytes(UTF_8))
     val uri = secret.toUri.toString
-    val in = Files.createTempDirectory("graft-xxe")
+    val in = tempDir("graft-xxe")
     def put(name: String, xml: String) =
       Files.write(in.resolve(name), xml.getBytes(UTF_8))
     put("general.xml", s"""<?xml version="1.0"?>
@@ -392,4 +484,12 @@ class IngestSpec extends SparkSpec {
     assert(narrow.columns.toSeq === Seq("_id", "title"))
     assert(narrow.count() === 3)
   }
+}
+
+object IngestSpec {
+
+  /** A generated element: its name, whether it carries an id, and its
+    * children, each text or an element. */
+  final case class Tree(name: String, hasId: Boolean,
+      kids: List[Either[String, Tree]])
 }

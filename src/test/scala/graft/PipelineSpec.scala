@@ -935,8 +935,7 @@ class PipelineSpec extends SparkSpec {
     val inMem = Similarity.semanticDedup(vecs, "embedding", "vec_id",
       cents, tau = 0.95)
       .as[(Long, Long, Option[Long])].collect().toSet
-    val dir = java.nio.file.Files
-      .createTempDirectory("semdedup_at_rest").toString + "/ivf"
+    val dir = tempDir("semdedup_at_rest").toString + "/ivf"
     PartitionedAnn.writeIvfPartitioned(vecs, "embedding", "vec_id",
       cents, dir)
     val atRest = Similarity.semanticDedupAssigned(
@@ -1045,7 +1044,7 @@ class PipelineSpec extends SparkSpec {
   test("sharding: manifest round-trips; fingerprint pins content drift") {
     val docs = (0L until 20L).map(i => (i, s"doc number $i text"))
       .toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    val out = tempDir("shards").toString
     Sharding.writeSharded(docs, "doc_id", out, nShards = 4)
     val m = Sharding.manifest(spark, out, "doc_id", "text").collect()
     assert(m.length === 4)
@@ -1054,7 +1053,7 @@ class PipelineSpec extends SparkSpec {
     // shard reports a different manifest row
     val docs2 = docs.withColumn("text",
       when($"doc_id" === 7L, lit("drifted")).otherwise($"text"))
-    val out2 = java.nio.file.Files.createTempDirectory("shards2").toString
+    val out2 = tempDir("shards2").toString
     Sharding.writeSharded(docs2, "doc_id", out2, nShards = 4)
     val m2 = Sharding.manifest(spark, out2, "doc_id", "text").collect()
     val diff = m.zip(m2).filter { case (a, b) => a.toString != b.toString }
@@ -1109,7 +1108,7 @@ class PipelineSpec extends SparkSpec {
       (2L, "a \"quoted\" phrase"),
       (3L, "trailing backslash \\"),
       (4L, "mixed, \"quote\", and \\ slash")).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("csvrt").toString
+    val out = tempDir("csvrt").toString
     Csv.write(docs, out)
     val back = Csv.read(spark, out, docs.schema, failFast = true)
     assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty)
@@ -1123,7 +1122,7 @@ class PipelineSpec extends SparkSpec {
   test("incremental shards: base∪delta manifest == rebuild; replay-idempotent") {
     val docs = (0L until 30L).map(i => (i, s"shard doc $i body"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("shinc").toString
+    val root = tempDir("shinc").toString
     Sharding.writeSharded(docs.filter($"doc_id" < 10), "doc_id",
       s"$root/base", nShards = 4)
     Sharding.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20),
@@ -1132,7 +1131,7 @@ class PipelineSpec extends SparkSpec {
       "doc_id", nShards = 4)
     val inc = Sharding.manifestIncremental(spark, root, "doc_id", "text")
       .collect().map(_.toString).toSeq
-    val full = java.nio.file.Files.createTempDirectory("shfull").toString
+    val full = tempDir("shfull").toString
     Sharding.writeSharded(docs, "doc_id", full, nShards = 4)
     val rebuilt = Sharding.manifest(spark, full, "doc_id", "text")
       .collect().map(_.toString).toSeq
@@ -1148,7 +1147,7 @@ class PipelineSpec extends SparkSpec {
 
   test("layout guards: CMS parameter drift and shard-count drift fail pointedly") {
     val docs = Seq((0L, "alpha beta gamma")).toDF("doc_id", "text")
-    val cmsRoot = java.nio.file.Files.createTempDirectory("cmsg").toString
+    val cmsRoot = tempDir("cmsg").toString
     graft.streaming.CmsStream.appendBatch(docs, 0L, cmsRoot, "text",
       n = 2, depth = 3, width = 1024)
     val e1 = intercept[IllegalArgumentException](
@@ -1164,7 +1163,7 @@ class PipelineSpec extends SparkSpec {
       TextAnalysis.heavyHittersFromCells(docs, "text", bad,
         n = 2, phiDenom = 10L, depth = 3, width = 1024).collect())
     assert(e3.getMessage.contains("not mergeable"))
-    val shRoot = java.nio.file.Files.createTempDirectory("shg").toString
+    val shRoot = tempDir("shg").toString
     Sharding.writeShardedBase(docs, "doc_id", shRoot, nShards = 4)
     // base-only layout: the incremental manifest degrades to base
     val baseOnly = Sharding.manifestIncremental(spark, shRoot,
@@ -1585,7 +1584,7 @@ class PipelineSpec extends SparkSpec {
       (0L, "a b a b", "en"),
       (1L, "c d c d", "zh"),
       (2L, "a b c d", "en")).toDF("doc_id", "text", "lang")
-    val dir = java.nio.file.Files.createTempDirectory("dsirstore").toString
+    val dir = tempDir("dsirstore").toString
     Sampling.writeDsirModel(d, "text", $"lang" === "en", n = 2, dir)
     // root sentinel present (round-18: ensureLayout-guarded callers
     // check it; a store without it silently retrains per call)
@@ -1824,7 +1823,7 @@ class PipelineSpec extends SparkSpec {
 
   test("jsonl round-trip is row-for-row lossless on the documents table") {
     val d = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("jsonl").toString
+    val out = tempDir("jsonl").toString
     Jsonl.write(d, s"$out/docs")
     val back = Jsonl.read(spark, s"$out/docs", d.schema, failFast = true)
     assert(back.exceptAll(d).count() === 0)
@@ -1832,7 +1831,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("jsonl: malformed lines null under PERMISSIVE, throw under FAILFAST") {
-    val out = java.nio.file.Files.createTempDirectory("jsonlbad").toString
+    val out = tempDir("jsonlbad").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$out/part-0.json"),
       """{"doc_id": 1, "text": "ok"}
@@ -2072,7 +2071,7 @@ class PipelineSpec extends SparkSpec {
   test("property: keyed SRP layout writes one file per bucket dir; probes are file-layout-independent") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val prop = Prop.forAll(genVecCorpus, Gen.choose(1, 4)) { (rows, planes) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-srp-prop")
+      val dir = tempDir("graft-srp-prop")
       val keyed = s"$dir/keyed"
       val sprayed = s"$dir/sprayed"
       val df = rows.toDF("vec_id", "embedding")
@@ -2097,7 +2096,7 @@ class PipelineSpec extends SparkSpec {
   test("property: keyed IVF layout writes one file per centroid dir; probes are file-layout-independent") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val prop = Prop.forAll(genVecCorpus, Gen.choose(2, 5)) { (rows, nCent) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-prop")
+      val dir = tempDir("graft-ivf-prop")
       val keyed = s"$dir/keyed"
       val sprayed = s"$dir/sprayed"
       val df = rows.toDF("vec_id", "embedding")
@@ -2154,8 +2153,7 @@ class PipelineSpec extends SparkSpec {
   test("chunk store: diff batches, generation precedence, replay idempotence, id-reuse guard") {
     def txt(seed: Int) =
       (0 until 80).map(i => s"w${(i * 7 + seed) % 31}x$i").mkString(" ")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-chunkstore").toString
+    val root = tempDir("graft-chunkstore").toString
     val snap0 = Seq((1L, txt(0)), (2L, txt(1)), (3L, txt(2)))
       .toDF("doc_id", "text")
     ChunkStore.writeBase(snap0, "text", "doc_id", root)
@@ -2244,7 +2242,7 @@ class PipelineSpec extends SparkSpec {
         "text", "doc_id")
     }
     // (a) fold is lossless and clears the delta trees
-    val rootA = Files.createTempDirectory("graft-cdc-cpt").toString
+    val rootA = tempDir("graft-cdc-cpt").toString
     build(rootA)
     val preFold = live(rootA)
     ChunkStore.compact(spark, rootA)
@@ -2268,9 +2266,9 @@ class PipelineSpec extends SparkSpec {
     // manifest, manifested deltas still on disk. Reconstruct it from
     // a twin root (deterministic writes ⇒ identical content), then
     // let the next append's recovery preamble complete the swap.
-    val crash = Files.createTempDirectory("graft-cdc-crash").toString
+    val crash = tempDir("graft-cdc-crash").toString
     build(crash)
-    val twin = Files.createTempDirectory("graft-cdc-twin").toString
+    val twin = tempDir("graft-cdc-twin").toString
     build(twin)
     ChunkStore.compact(spark, twin)
     copyRec(new java.io.File(s"$twin/base").toPath,
@@ -2955,8 +2953,7 @@ class PipelineSpec extends SparkSpec {
   test("chunk store: writeBase over a previously-compacted root clears the stale fold watermark") {
     def txt(seed: Int) =
       (0 until 60).map(i => s"r${(i * 5 + seed) % 23}z$i").mkString(" ")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-chunkstore-rebuild").toString
+    val root = tempDir("graft-chunkstore-rebuild").toString
     val s0 = Seq((1L, txt(0)), (2L, txt(1))).toDF("doc_id", "text")
     val s1 = Seq((1L, txt(0)), (2L, txt(2))).toDF("doc_id", "text")
     ChunkStore.writeBase(s0, "text", "doc_id", root)
@@ -3028,14 +3025,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("kn chain carries its training params; the store stamps from the chain") {
-    import java.nio.file.Files
     val train = Seq((0L, "a b c d e a b c d e f g h i j"))
       .toDF("doc_id", "text")
     val chain = TextAnalysis.ngramLmMknChainModel(
       TextAnalysis.ngramLmCounts(train, "text", maxN = 3), 3)
     assert(chain.modifiedTop && chain.minTopCount === 1L)
     assert(chain.topRows > 0 && chain.midRows.length === 1)
-    val root = Files.createTempDirectory("graft-knstamp").toString
+    val root = tempDir("graft-knstamp").toString
     // the writer has no params arguments: what lands in the store is
     // what the chain was trained with, never a caller's claim
     TextAnalysis.writeKnChainModel(chain, root)
@@ -3050,9 +3046,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("bpe store stamps max_vocab; a capped store fails an uncapped reader") {
-    import java.nio.file.Files
     val d = Seq((0L, "aa ab aa ab ba")).toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-bpemv").toString
+    val root = tempDir("graft-bpemv").toString
     TextAnalysis.writeBpeModel(d, "text", rounds = 1, minCount = 1L,
       root, maxVocab = 2)
     val e = intercept[IllegalArgumentException](

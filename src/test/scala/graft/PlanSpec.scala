@@ -147,7 +147,7 @@ class PlanSpec extends SparkSpec {
     def scans(p: SparkPlan): Seq[FileSourceScanExec] =
       p.collect { case s: FileSourceScanExec => Seq(s)
                   case q: QueryStageExec => scans(q.plan) }.flatten
-    val tmp = java.nio.file.Files.createTempDirectory("annprune").toString
+    val tmp = tempDir("annprune").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     graft.pipeline.PartitionedAnn.writeSrpBucketed(
       e.filter(org.apache.spark.sql.functions.col("vec_id") >= 10),
@@ -189,7 +189,7 @@ class PlanSpec extends SparkSpec {
     def scans(p: SparkPlan): Seq[FileSourceScanExec] =
       p.collect { case s: FileSourceScanExec => Seq(s)
                   case q: QueryStageExec => scans(q.plan) }.flatten
-    val tmp = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val tmp = tempDir("bm25idx").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.pipeline.Retrieval.writeBm25Index(docs, "text", "doc_id",
       tmp, buckets = 64)
@@ -225,7 +225,7 @@ class PlanSpec extends SparkSpec {
 
   test("at-rest decontamination: the probe reads only the benchmark grams' buckets") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("gramidx").toString
+    val tmp = tempDir("gramidx").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.pipeline.Dedup.writeGramIndex(docs, "text", "doc_id", tmp,
       n = 5, buckets = 64)
@@ -243,7 +243,7 @@ class PlanSpec extends SparkSpec {
 
   test("incremental gram index: probes prune base AND delta scans") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("gramincr").toString
+    val tmp = tempDir("gramincr").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.pipeline.Dedup.writeGramIndex(
       docs.filter(col("doc_id") % 2 === 0), "text", "doc_id",
@@ -264,7 +264,7 @@ class PlanSpec extends SparkSpec {
 
   test("incremental BM25: probes prune base AND delta scans") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("bm25incr").toString
+    val tmp = tempDir("bm25incr").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.pipeline.Retrieval.writeBm25Index(
       docs.filter(col("doc_id") % 2 === 0), "text", "doc_id",
@@ -306,7 +306,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("int8 partitioned ANN: pruning survives the quantized layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("annprune8").toString
+    val tmp = tempDir("annprune8").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     graft.pipeline.PartitionedAnn.writeSrpBucketedInt8(
       e.filter(org.apache.spark.sql.functions.col("vec_id") >= 10),
@@ -324,7 +324,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("int8 IVF partitioned ANN: probed centroids prune, pages are tinyint") {
-    val tmp = java.nio.file.Files.createTempDirectory("annprune8i").toString
+    val tmp = tempDir("annprune8i").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter(org.apache.spark.sql.functions.col("vec_id") >= 10)
     val cents = corpus
@@ -346,7 +346,7 @@ class PlanSpec extends SparkSpec {
 
   test("IVF+PQ partitioned ANN: probed centroids prune; files hold only code arrays") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("annpq").toString
+    val tmp = tempDir("annpq").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter(col("vec_id") >= 10)
     val cents = corpus.filter(col("vec_id") % 50 === 0)
@@ -374,7 +374,7 @@ class PlanSpec extends SparkSpec {
 
   test("IVF+PQ refined: BOTH layout scans prune on the probed cent_ids") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("annref").toString
+    val tmp = tempDir("annref").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter(col("vec_id") >= 10)
     val cents = corpus.filter(col("vec_id") % 50 === 0)
@@ -405,7 +405,7 @@ class PlanSpec extends SparkSpec {
 
   test("binary partitioned ANN: own-bucket pruning; pages hold packed words only") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("annbin").toString
+    val tmp = tempDir("annbin").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     graft.pipeline.PartitionedAnn.writeBinaryPartitioned(
       e.filter(col("vec_id") >= 10), "embedding", "vec_id",
@@ -467,7 +467,7 @@ class PlanSpec extends SparkSpec {
     // word_ngrams reconstruction anywhere in the scrub plan (the
     // scan-dominant cost the inline form pays per call)
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("spanplan").toString
+    val tmp = tempDir("spanplan").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.pipeline.TextAnalysis.writeSpanIndex(docs, "text", "doc_id",
       tmp, n = 5, buckets = 16)
@@ -480,7 +480,7 @@ class PlanSpec extends SparkSpec {
     // bucketed grams for span coverage)
     assert(p.contains("/tokens") && p.contains("/grams"), p)
     // the incremental form keeps the property over base ∪ deltas
-    val root = java.nio.file.Files.createTempDirectory("spanplan2").toString
+    val root = tempDir("spanplan2").toString
     graft.pipeline.TextAnalysis.writeSpanIndex(
       docs.filter(col("doc_id") % 2 === 0), "text", "doc_id",
       s"$root/base", n = 5, buckets = 16)
@@ -759,7 +759,6 @@ class PlanSpec extends SparkSpec {
     // observe-stamped per-batch _ROWS counts. Over-cap is pinned via
     // the gate's cap override (the tokenize/DSIR technique); the hint
     // is a pure driver listing, so rebuilding the frame re-reads it.
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.{concat, lit}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import graft.pipeline.Retrieval
@@ -774,7 +773,7 @@ class PlanSpec extends SparkSpec {
       }).toString
     }
     // BM25: base + one re-crawl batch ⇒ non-empty stamped sidecar
-    val root = Files.createTempDirectory("graft-plan-bm25").toString
+    val root = tempDir("graft-plan-bm25").toString
     Retrieval.writeBm25Index(docs.filter($"doc_id" < 120), "text",
       "doc_id", s"$root/base", buckets = 8)
     Bm25Stream.appendBatch(
@@ -783,7 +782,7 @@ class PlanSpec extends SparkSpec {
       1L, root, "text", "doc_id", buckets = 8)
     // LSH: two batches where batch 1 re-arrives batch-0 keys ⇒
     // non-empty stamped sidecar; livePrior for a later batch joins it
-    val lsh = Files.createTempDirectory("graft-plan-lsh").toString
+    val lsh = tempDir("graft-plan-lsh").toString
     LshStream.processBatch(docs.filter($"doc_id" < 60), 0L,
       s"$lsh/pairs", s"$lsh/bands", "text", "doc_id", 8, 4)
     LshStream.processBatch(

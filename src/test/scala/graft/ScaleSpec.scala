@@ -181,8 +181,7 @@ class ScaleSpec extends SparkSpec {
       .agg(min_by(struct($"embedding", $"cent_id"),
         struct(-$"ccos", $"cent_id")).as("w"))
       .select($"vec_id", $"w.cent_id".as("cent_id"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-ivf-rest").toString
+    val out = tempDir("graft-ivf-rest").toString
     assigned.write.partitionBy("cent_id").mode("overwrite").parquet(out)
     val probed = spark.read.parquet(out)
       .filter($"cent_id".isin(50, 100))
@@ -243,7 +242,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("ingest scales across many files with stable counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-many")
+    val dir = tempDir("graft-many")
     (0 until 200).foreach { i =>
       val xml =
         s"""<?xml version="1.0"?>
@@ -275,6 +274,7 @@ class ScaleSpec extends SparkSpec {
     // lists every file. inputFiles is the driver's own file index —
     // the assertion is on what the driver actually listed/kept.
     val (flat, part) = graft.tools.ListingCorpus.generate(1000, 10)
+    Seq(flat, part).foreach(removeAfterAll)
     def read(path: String, glob: Option[String]) = {
       val r = spark.read.format("binaryFile")
       glob.foreach(g => r.option("pathGlobFilter", g))

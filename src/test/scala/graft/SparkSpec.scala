@@ -1,14 +1,35 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path}
 
 /** Shared local session for all suites (one JVM-wide session — Spark
   * reuses the active session across `getOrCreate` calls). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val fixturesDir: String = SparkSpec.fixturesDir
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** Deletes `p`, with its contents, after the suite; returns `p`. */
+  def removeAfterAll(p: Path): Path = { temps.add(p); p }
+
+  /** A new temporary directory, deleted with its contents after the
+    * suite. */
+  def tempDir(prefix: String): Path =
+    removeAfterAll(Files.createTempDirectory(prefix))
+
+  /** A new temporary file, deleted after the suite. */
+  def tempFile(prefix: String, suffix: String): Path =
+    removeAfterAll(Files.createTempFile(prefix, suffix))
+
+  override def afterAll(): Unit =
+    try temps.forEach(SparkSpec.deleteRecursively(_))
+    finally super.afterAll()
 
   /** Runs `body` and returns its result with the number of Spark jobs
     * it submitted. Only jobs carrying a local property set on this
@@ -45,6 +66,18 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   val fixturesDir: String =
     sys.env.getOrElse("GRAFT_FIXTURES", "src/test/resources/fixtures")
+
+  /** Deletes `root` and everything under it, children first. Best
+    * effort: a path left behind is not a test failure. */
+  private def deleteRecursively(root: Path): Unit =
+    try {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(Files.deleteIfExists(_))
+      finally paths.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()

@@ -207,9 +207,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming XML ingest converts files as they appear") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val in = Files.createTempDirectory("graft-stream-in")
-    val out = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
+    val in = tempDir("graft-stream-in")
+    val out = tempDir("graft-stream-out").toString
+    val ckpt = tempDir("graft-stream-ckpt").toString
     Files.copy(Paths.get(s"$fixturesDir/simple.xml"),
       in.resolve("simple.xml"), StandardCopyOption.REPLACE_EXISTING)
     val q = graft.streaming.XmlStreamIngest.run(spark, in.toString, out,
@@ -246,7 +246,7 @@ class StreamingSpec extends SparkSpec {
       // plus sample_library.xml), row-for-row on every deterministic
       // column (created_at is an ingest wall clock; filename/file paths
       // differ by construction)
-      val finalState = Files.createTempDirectory("graft-stream-final")
+      val finalState = tempDir("graft-stream-final")
       Files.write(finalState.resolve("simple.xml"), v2.getBytes("UTF-8"))
       Files.copy(Paths.get(s"$fixturesDir/sample_library.xml"),
         finalState.resolve("sample_library.xml"),
@@ -272,7 +272,7 @@ class StreamingSpec extends SparkSpec {
     // an output dir whose early batches predate the documents
     // file_hash column: compact must surface the widest schema (old
     // rows null) instead of silently taking one footer's view
-    val out = java.nio.file.Files.createTempDirectory("graft-mixed").toString
+    val out = tempDir("graft-mixed").toString
     Seq(("doc_a", "doc_a.xml", 10L, 0L))
       .toDF("id", "filename", "file_size", "_batch")
       .write.mode("append").parquet(s"$out/documents")
@@ -540,8 +540,8 @@ class StreamingSpec extends SparkSpec {
     // dedup state, session state, and watermark all restored; the file
     // sink's transaction log keeps the output exactly-once.
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-rst").toString
+    val ckpt = tempDir("graft-ckpt").toString
+    val outDir = tempDir("graft-rst").toString
     val source = MemoryStream[(Long, Long, Long, String, Double)]
     def ns(sec: Long): Long = sec * 1000000000L
     // dedup → session_window: two chained stateful operators, both
@@ -597,9 +597,9 @@ class StreamingSpec extends SparkSpec {
 
   test("stream LM scoring equals batch scoring with the same trained model") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-lm-in")
-    val out = Files.createTempDirectory("graft-lm-out").toString
-    val ckpt = Files.createTempDirectory("graft-lm-ckpt").toString
+    val in = tempDir("graft-lm-in")
+    val out = tempDir("graft-lm-out").toString
+    val ckpt = tempDir("graft-lm-ckpt").toString
     val train = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     // stream input: fresh docs from the same distribution plus one
     // whose bigrams the model has never seen
@@ -611,7 +611,7 @@ class StreamingSpec extends SparkSpec {
         .withColumn("doc_id", lit(99999L))
         .withColumn("text", lit("zebra quark zebra quark")))
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-lm-chunk")
+      val tmp = tempDir("graft-lm-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -643,13 +643,13 @@ class StreamingSpec extends SparkSpec {
 
   test("streamed CMS cells merge to the one-shot heavy-hitter result") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-cms-in")
-    val root = Files.createTempDirectory("graft-cms-root").toString
+    val in = tempDir("graft-cms-in")
+    val root = tempDir("graft-cms-root").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val c1 = docs.filter($"doc_id" < 250)
     val c2 = docs.filter($"doc_id" >= 250)
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-cms-chunk")
+      val tmp = tempDir("graft-cms-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -686,8 +686,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incremental LSH batch replay is idempotent, band state survives") {
-    import java.nio.file.Files
-    val out = Files.createTempDirectory("graft-lsh-replay").toString
+    val out = tempDir("graft-lsh-replay").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val b0 = docs.filter($"doc_id" < 100)
     val b1 = docs.filter($"doc_id" >= 100 && $"doc_id" < 200)
@@ -714,9 +713,9 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental LSH equals the batch form, candidates across batches") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-lsh-in")
-    val out = Files.createTempDirectory("graft-lsh-out").toString
-    val ckpt = Files.createTempDirectory("graft-lsh-ckpt").toString
+    val in = tempDir("graft-lsh-in")
+    val out = tempDir("graft-lsh-out").toString
+    val ckpt = tempDir("graft-lsh-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     // near-dup "recrawls" of chunk-1 documents arrive in chunks 2 and 3
     // (identical text ⇒ identical signatures ⇒ all bands collide), so
@@ -732,7 +731,7 @@ class StreamingSpec extends SparkSpec {
     val full = docs.unionByName(recrawl(Seq(0L, 11L, 22L), 1000))
       .unionByName(recrawl(Seq(33L, 44L), 2000))
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-lsh-chunk")
+      val tmp = tempDir("graft-lsh-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -762,9 +761,9 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental LSH last-write-wins: a re-arrived key joins as its new version only") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-lsh-lww-in")
-    val out = Files.createTempDirectory("graft-lsh-lww-out").toString
-    val ckpt = Files.createTempDirectory("graft-lsh-lww-ckpt").toString
+    val in = tempDir("graft-lsh-lww-in")
+    val out = tempDir("graft-lsh-lww-out").toString
+    val ckpt = tempDir("graft-lsh-lww-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     def asId(srcId: Long, newId: Long) =
       docs.filter($"doc_id" === srcId).withColumn("doc_id", lit(newId))
@@ -785,7 +784,7 @@ class StreamingSpec extends SparkSpec {
     val latest = docs.filter($"doc_id" =!= 7L).unionByName(asId(11L, 7L))
       .unionByName(asId(7L, 6000L)).unionByName(asId(11L, 5000L))
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-lsh-lww-chunk")
+      val tmp = tempDir("graft-lsh-lww-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -822,9 +821,9 @@ class StreamingSpec extends SparkSpec {
   test("LSH compaction: store folds losslessly, supersedes keep matching, watermark holds") {
     import java.nio.file.Files
     import graft.streaming.LshStream
-    val in = Files.createTempDirectory("graft-lsh-cpt-in")
-    val out = Files.createTempDirectory("graft-lsh-cpt-out").toString
-    val ckpt = Files.createTempDirectory("graft-lsh-cpt-ckpt").toString
+    val in = tempDir("graft-lsh-cpt-in")
+    val out = tempDir("graft-lsh-cpt-out").toString
+    val ckpt = tempDir("graft-lsh-cpt-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     def asId(srcId: Long, newId: Long) =
       docs.filter($"doc_id" === srcId).withColumn("doc_id", lit(newId))
@@ -843,7 +842,7 @@ class StreamingSpec extends SparkSpec {
     val latest = docs.filter($"doc_id" =!= 7L).unionByName(asId(11L, 7L))
       .unionByName(asId(11L, 5000L)).unionByName(asId(7L, 6000L))
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-lsh-cpt-chunk")
+      val tmp = tempDir("graft-lsh-cpt-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -885,8 +884,7 @@ class StreamingSpec extends SparkSpec {
     // broadcast anti-joins — never re-shuffled or windowed (the
     // previous per-key max-batch window moved the whole store through
     // an exchange every micro-batch, a cost growing with corpus size).
-    import java.nio.file.Files
-    val out = Files.createTempDirectory("graft-lsh-plan").toString
+    val out = tempDir("graft-lsh-plan").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.streaming.LshStream.processBatch(docs.filter($"doc_id" < 50),
       0L, s"$out/pairs", s"$out/bands", "text", "doc_id", 8, 4)
@@ -912,7 +910,7 @@ class StreamingSpec extends SparkSpec {
   test("IVF delta compaction: single level, layout-identical, crash-recoverable") {
     import java.nio.file.Files
     import graft.pipeline.PartitionedAnn
-    val root = Files.createTempDirectory("graft-compact").toString
+    val root = tempDir("graft-compact").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter($"vec_id" >= 10)
     val centroids = corpus.filter($"vec_id" < 60)
@@ -975,7 +973,7 @@ class StreamingSpec extends SparkSpec {
           copyTree(f, new java.io.File(dst, f.getName))))
       } else Files.copy(src.toPath, dst.toPath): Unit
     }
-    val root = Files.createTempDirectory("graft-swap").toString
+    val root = tempDir("graft-swap").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter($"vec_id" >= 10)
     val centroids = corpus.filter($"vec_id" < 60)
@@ -1074,8 +1072,8 @@ class StreamingSpec extends SparkSpec {
         s"$root: probe diverged from full rebuild after recovery")
     }
     // float
-    val rootF = Files.createTempDirectory("graft-crashf").toString
-    val fullF = Files.createTempDirectory("graft-crashf-full").toString
+    val rootF = tempDir("graft-crashf").toString
+    val fullF = tempDir("graft-crashf-full").toString
     PartitionedAnn.writeIvfPartitioned(baseSlice, "embedding",
       "vec_id", centroids, s"$rootF/base")
     PartitionedAnn.writeIvfPartitioned(corpus, "embedding", "vec_id",
@@ -1095,8 +1093,8 @@ class StreamingSpec extends SparkSpec {
         .select($"q_id", $"rank", $"c_id").as[(Long, Int, Long)]
         .collect().toSet)
     // int8
-    val root8 = Files.createTempDirectory("graft-crash8").toString
-    val full8 = Files.createTempDirectory("graft-crash8-full").toString
+    val root8 = tempDir("graft-crash8").toString
+    val full8 = tempDir("graft-crash8-full").toString
     PartitionedAnn.writeIvfPartitionedInt8(baseSlice, "embedding",
       "vec_id", centroids, s"$root8/base")
     PartitionedAnn.writeIvfPartitionedInt8(corpus, "embedding",
@@ -1118,8 +1116,8 @@ class StreamingSpec extends SparkSpec {
         .collect().toSet)
     // PQ — a kept delta would feed EVERY duplicated code row into the
     // ADC candidate stream
-    val rootP = Files.createTempDirectory("graft-crashp").toString
-    val fullP = Files.createTempDirectory("graft-crashp-full").toString
+    val rootP = tempDir("graft-crashp").toString
+    val fullP = tempDir("graft-crashp-full").toString
     PartitionedAnn.writeIvfPqPartitioned(baseSlice, "embedding",
       "vec_id", centroids, cw, s"$rootP/base", numSub = 8, subDim = 8)
     PartitionedAnn.writeIvfPqPartitioned(corpus, "embedding",
@@ -1151,10 +1149,9 @@ class StreamingSpec extends SparkSpec {
     // (LshStream is the nastiest case: sidecar rows recorded against
     // the old generation would supersede the NEW rows written under
     // the reused id, anti-joining fresh documents away forever).
-    import java.nio.file.Files
     import graft.streaming.{CmsStream, IvfStream, LshStream}
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val lsh = Files.createTempDirectory("graft-reuse-lsh").toString
+    val lsh = tempDir("graft-reuse-lsh").toString
     LshStream.processBatch(docs.filter($"doc_id" < 20), 1L,
       s"$lsh/pairs", s"$lsh/bands", "text", "doc_id", 8, 4)
     LshStream.processBatch(
@@ -1168,7 +1165,7 @@ class StreamingSpec extends SparkSpec {
     LshStream.processBatch(
       docs.filter($"doc_id" >= 20 && $"doc_id" < 40), 2L,
       s"$lsh/pairs", s"$lsh/bands", "text", "doc_id", 8, 4)
-    val cms = Files.createTempDirectory("graft-reuse-cms").toString
+    val cms = tempDir("graft-reuse-cms").toString
     CmsStream.appendBatch(docs.filter($"doc_id" < 20), 0L, cms,
       "text", 2, 3, 1024)
     CmsStream.appendBatch(docs.filter($"doc_id" >= 20), 1L, cms,
@@ -1179,7 +1176,7 @@ class StreamingSpec extends SparkSpec {
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val cents = emb.filter($"vec_id" < 20)
       .select($"vec_id".as("cent_id"), $"embedding".as("cent_vec"))
-    val ivf = Files.createTempDirectory("graft-reuse-ivf").toString
+    val ivf = tempDir("graft-reuse-ivf").toString
     IvfStream.appendBatch(emb.filter($"vec_id" < 100), 0L, ivf, cents,
       "embedding", "vec_id")
     IvfStream.appendBatch(emb.filter($"vec_id" >= 100), 1L, ivf, cents,
@@ -1202,9 +1199,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("codebook refresh re-partitions the live layout by the new assignment") {
-    import java.nio.file.Files
     import graft.pipeline.{PartitionedAnn, Similarity}
-    val root = Files.createTempDirectory("graft-refresh").toString
+    val root = tempDir("graft-refresh").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter($"vec_id" >= 10)
     val oldCents = corpus.filter($"vec_id" < 60)
@@ -1243,10 +1239,10 @@ class StreamingSpec extends SparkSpec {
   test("incremental IVF layout equals a full rebuild, replay-safe") {
     import java.nio.file.Files
     import graft.pipeline.{PartitionedAnn, Similarity}
-    val in = Files.createTempDirectory("graft-ivf-in")
-    val root = Files.createTempDirectory("graft-ivf-root").toString
-    val ckpt = Files.createTempDirectory("graft-ivf-ckpt").toString
-    val full = Files.createTempDirectory("graft-ivf-full").toString
+    val in = tempDir("graft-ivf-in")
+    val root = tempDir("graft-ivf-root").toString
+    val ckpt = tempDir("graft-ivf-ckpt").toString
+    val full = tempDir("graft-ivf-full").toString
     val e = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val corpus = e.filter($"vec_id" >= 10)
     val centroids = corpus.filter($"vec_id" < 60)
@@ -1257,7 +1253,7 @@ class StreamingSpec extends SparkSpec {
       corpus.filter($"vec_id" < 700), "embedding", "vec_id", centroids,
       s"$root/base")
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-ivf-chunk")
+      val tmp = tempDir("graft-ivf-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1308,8 +1304,8 @@ class StreamingSpec extends SparkSpec {
     // 4. the int8 twin: streamed tinyint pages are BIT-identical to a
     //    full int8 rebuild (per-vector max-abs quantization is
     //    corpus-independent; assignment shares the float codebook)
-    val root8 = Files.createTempDirectory("graft-ivf8-root").toString
-    val full8 = Files.createTempDirectory("graft-ivf8-full").toString
+    val root8 = tempDir("graft-ivf8-root").toString
+    val full8 = tempDir("graft-ivf8-full").toString
     PartitionedAnn.writeIvfPartitionedInt8(
       corpus.filter($"vec_id" < 700), "embedding", "vec_id", centroids,
       s"$root8/base")
@@ -1341,8 +1337,8 @@ class StreamingSpec extends SparkSpec {
     // 5. the PQ twin: streamed code arrays are BIT-identical to a full
     //    PQ rebuild (assignment and per-subspace argmin are both
     //    per-vector deterministic under fixed centroids/codewords)
-    val rootPq = Files.createTempDirectory("graft-ivfpq-root").toString
-    val fullPq = Files.createTempDirectory("graft-ivfpq-full").toString
+    val rootPq = tempDir("graft-ivfpq-root").toString
+    val fullPq = tempDir("graft-ivfpq-full").toString
     val cw = Similarity.pqCodewords(
       corpus.filter($"vec_id" < 60), "embedding", "vec_id",
       numSub = 8, subDim = 8).localCheckpoint()
@@ -1378,8 +1374,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("curation funnel batch replay is idempotent, state survives") {
-    import java.nio.file.Files
-    val out = Files.createTempDirectory("graft-cur-replay").toString
+    val out = tempDir("graft-cur-replay").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val b0 = docs.filter($"doc_id" < 100)
     val b1 = docs.filter($"doc_id" >= 100 && $"doc_id" < 200)
@@ -1407,9 +1402,9 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental curation funnel equals the batch funnel, dedup across batches") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-cur-in")
-    val out = Files.createTempDirectory("graft-cur-out").toString
-    val ckpt = Files.createTempDirectory("graft-cur-ckpt").toString
+    val in = tempDir("graft-cur-in")
+    val out = tempDir("graft-cur-out").toString
+    val ckpt = tempDir("graft-cur-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     // three chunks ascending in doc_id, with "recrawl" duplicates of
     // CHUNK-1 documents arriving in chunks 2 and 3 — the cross-batch
@@ -1427,7 +1422,7 @@ class StreamingSpec extends SparkSpec {
       .unionByName(recrawl(Seq(33L, 44L), 2000))
     // one parquet file per chunk, moved into the watched dir in order
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-cur-chunk")
+      val tmp = tempDir("graft-cur-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1471,10 +1466,10 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.pipeline.Retrieval
     import graft.streaming.Bm25Stream
-    val in = Files.createTempDirectory("graft-bm25-in")
-    val root = Files.createTempDirectory("graft-bm25-root").toString
-    val ckpt = Files.createTempDirectory("graft-bm25-ckpt").toString
-    val full = Files.createTempDirectory("graft-bm25-full").toString
+    val in = tempDir("graft-bm25-in")
+    val root = tempDir("graft-bm25-root").toString
+    val ckpt = tempDir("graft-bm25-ckpt").toString
+    val full = tempDir("graft-bm25-full").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val qs = spark.createDataFrame(Seq(
       (0L, "spark join window"), (1L, "fast table scan")))
@@ -1483,7 +1478,7 @@ class StreamingSpec extends SparkSpec {
     Retrieval.writeBm25Index(docs.filter($"doc_id" % 3 === 0),
       "text", "doc_id", s"$root/base", buckets = 16)
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-bm25-chunk")
+      val tmp = tempDir("graft-bm25-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1540,11 +1535,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incremental BM25: re-crawled docs supersede exactly, twice-updated once each") {
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.{concat, lit}
     import graft.pipeline.Retrieval
     import graft.streaming.Bm25Stream
-    val root = Files.createTempDirectory("graft-bm25-upd").toString
+    val root = tempDir("graft-bm25-upd").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val qs = spark.createDataFrame(Seq(
       (0L, "spark join window"), (1L, "alpha beta gamma")))
@@ -1555,7 +1549,7 @@ class StreamingSpec extends SparkSpec {
     def probe() = rows(Bm25Stream.bm25TopKIncremental(spark, root, qs,
       "q_id", "q_text", k = 10, buckets = 16))
     def rebuildOver(latest: org.apache.spark.sql.DataFrame) = {
-      val tmp = Files.createTempDirectory("graft-bm25-upd-full").toString
+      val tmp = tempDir("graft-bm25-upd-full").toString
       Retrieval.writeBm25Index(latest, "text", "doc_id", tmp,
         buckets = 16)
       rows(Retrieval.bm25TopKAtRest(spark, tmp, qs, "q_id", "q_text",
@@ -1607,7 +1601,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{concat, lit}
     import graft.pipeline.Retrieval
     import graft.streaming.Bm25Stream
-    val root = Files.createTempDirectory("graft-bm25-dangle").toString
+    val root = tempDir("graft-bm25-dangle").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val qs = spark.createDataFrame(Seq(
       (0L, "spark join window"), (1L, "alpha beta crash")))
@@ -1628,7 +1622,7 @@ class StreamingSpec extends SparkSpec {
         dst.mkdirs()
         src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
       } else Files.copy(src.toPath, dst.toPath): Unit
-    val aside = Files.createTempDirectory("graft-bm25-aside").toString
+    val aside = tempDir("graft-bm25-aside").toString
     val trees = Seq("delta/batch=1", "delta_stats/batch=1",
       "delta_docs/batch=1", "superseded/batch=1")
     trees.foreach { t =>
@@ -1661,7 +1655,7 @@ class StreamingSpec extends SparkSpec {
       buckets = 16)
     Bm25Stream.compact(spark, root)
     // rebuild over the latest versions is the truth
-    val full = Files.createTempDirectory("graft-bm25-dangle-f").toString
+    val full = tempDir("graft-bm25-dangle-f").toString
     Retrieval.writeBm25Index(
       docs.filter($"doc_id" =!= 1 && $"doc_id" =!= 0).unionByName(upd),
       "text", "doc_id", full, buckets = 16)
@@ -1674,10 +1668,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("BM25 fold watermark rejects reused batch ids after compaction") {
-    import java.nio.file.Files
     import graft.pipeline.Retrieval
     import graft.streaming.Bm25Stream
-    val root = Files.createTempDirectory("graft-bm25-wm").toString
+    val root = tempDir("graft-bm25-wm").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     Retrieval.writeBm25Index(docs.filter($"doc_id" % 2 === 0),
       "text", "doc_id", s"$root/base", buckets = 16)
@@ -1707,10 +1700,10 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.pipeline.Dedup
     import graft.streaming.GramStream
-    val in = Files.createTempDirectory("graft-gram-in")
-    val root = Files.createTempDirectory("graft-gram-root").toString
-    val ckpt = Files.createTempDirectory("graft-gram-ckpt").toString
-    val full = Files.createTempDirectory("graft-gram-full").toString
+    val in = tempDir("graft-gram-in")
+    val root = tempDir("graft-gram-root").toString
+    val ckpt = tempDir("graft-gram-ckpt").toString
+    val full = tempDir("graft-gram-full").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val test = docs.filter($"source" === "src0")
     def rows(df: org.apache.spark.sql.DataFrame) = df
@@ -1719,7 +1712,7 @@ class StreamingSpec extends SparkSpec {
     Dedup.writeGramIndex(docs.filter($"doc_id" % 3 === 0),
       "text", "doc_id", s"$root/base", n = 5, buckets = 16)
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-gram-chunk")
+      val tmp = tempDir("graft-gram-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1788,7 +1781,7 @@ class StreamingSpec extends SparkSpec {
         manifest.getBytes("UTF-8"))
     }
     // --- LshStream.processBatch: recover-first ---
-    val lsh = Files.createTempDirectory("graft-midswap-lsh").toString
+    val lsh = tempDir("graft-midswap-lsh").toString
     LshStream.processBatch(docs.filter($"doc_id" < 200), 1L,
       s"$lsh/pairs", s"$lsh/bands", "text", "doc_id", 8, 4)
     LshStream.compact(spark, lsh)
@@ -1807,7 +1800,7 @@ class StreamingSpec extends SparkSpec {
     assert(!got.exists(p => p._1 == 7000L || p._2 == 7000L),
       "stale bands of the mid-swap re-crawl kept matching")
     // --- GramStream.appendBatch: additive, manifest-protected ---
-    val g = Files.createTempDirectory("graft-midswap-gram").toString
+    val g = tempDir("graft-midswap-gram").toString
     Dedup.writeGramIndex(docs.filter($"doc_id" % 3 === 0), "text",
       "doc_id", s"$g/base", n = 5, buckets = 16)
     GramStream.appendBatch(docs.filter($"doc_id" % 3 === 1), 1L, g,
@@ -1841,7 +1834,7 @@ class StreamingSpec extends SparkSpec {
       DriftStream, LineStream, LmStream, NbStream}
     val few = docs.limit(10)
     def pendForeign(): String = {
-      val r = Files.createTempDirectory("graft-midswap-nocompact")
+      val r = tempDir("graft-midswap-nocompact")
         .toString
       assert(new java.io.File(s"$r/base_compact").mkdirs())
       Files.write(
@@ -1893,9 +1886,9 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.pipeline.TextAnalysis
     import graft.streaming.DriftStream
-    val in = Files.createTempDirectory("graft-drift-in")
-    val root = Files.createTempDirectory("graft-drift-root").toString
-    val ckpt = Files.createTempDirectory("graft-drift-ckpt").toString
+    val in = tempDir("graft-drift-in")
+    val root = tempDir("graft-drift-root").toString
+    val ckpt = tempDir("graft-drift-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"bucket", $"n_base", $"n_new", $"psi_term")
@@ -1903,7 +1896,7 @@ class StreamingSpec extends SparkSpec {
     DriftStream.writeBaseline(docs.filter($"source" === "src0"),
       "n_chars", root, bucketWidth = 100L, nBuckets = 10)
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-drift-chunk")
+      val tmp = tempDir("graft-drift-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1931,7 +1924,7 @@ class StreamingSpec extends SparkSpec {
     // contract; appends then bucket under the new one — while a
     // baseline-less report on a params-only root fails loudly (no
     // silent empty-baseline drift)
-    val root2 = Files.createTempDirectory("graft-drift-root2").toString
+    val root2 = tempDir("graft-drift-root2").toString
     DriftStream.writeBaseline(docs.limit(10), "n_chars", root2,
       bucketWidth = 50L, nBuckets = 20)
     assert(DriftStream.report(spark, root2).count() === 20)
@@ -1952,9 +1945,9 @@ class StreamingSpec extends SparkSpec {
     import graft.pipeline.Validation
     import graft.pipeline.Validation._
     import graft.streaming.DqStream
-    val in = Files.createTempDirectory("graft-dq-in")
-    val root = Files.createTempDirectory("graft-dq-root").toString
-    val ckpt = Files.createTempDirectory("graft-dq-ckpt").toString
+    val in = tempDir("graft-dq-in")
+    val root = tempDir("graft-dq-root").toString
+    val ckpt = tempDir("graft-dq-ckpt").toString
     val li = spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
     val rules: Seq[Rule] = Seq(
       Completeness("complete_rf", "l_returnflag", 1.0),
@@ -1964,7 +1957,7 @@ class StreamingSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .as[(String, Double, Double, String, Boolean)].collect().toSeq
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-dq-chunk")
+      val tmp = tempDir("graft-dq-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -2001,7 +1994,7 @@ class StreamingSpec extends SparkSpec {
     // a report with nothing streamed is a loud error, not NaNs
     val e4 = intercept[IllegalStateException](
       DqStream.report(spark,
-        Files.createTempDirectory("graft-dq-empty").toString,
+        tempDir("graft-dq-empty").toString,
         rules, "v1"))
     assert(e4.getMessage.contains("no partials"))
   }
@@ -2010,16 +2003,16 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.pipeline.Classify
     import graft.streaming.NbStream
-    val in = Files.createTempDirectory("graft-nb-in")
-    val root = Files.createTempDirectory("graft-nb-root").toString
-    val ckpt = Files.createTempDirectory("graft-nb-ckpt").toString
+    val in = tempDir("graft-nb-in")
+    val root = tempDir("graft-nb-root").toString
+    val ckpt = tempDir("graft-nb-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select($"doc_id", $"text", $"lang")
     def grid(df: org.apache.spark.sql.DataFrame) = df
       .select($"label", $"token", $"loglik".cast("string"))
       .as[(String, String, String)].collect().toSet
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-nb-chunk")
+      val tmp = tempDir("graft-nb-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -2055,7 +2048,7 @@ class StreamingSpec extends SparkSpec {
     // a model with nothing streamed is a loud error, not an empty grid
     val e2 = intercept[IllegalStateException](
       NbStream.model(spark,
-        Files.createTempDirectory("graft-nb-empty").toString))
+        tempDir("graft-nb-empty").toString))
     assert(e2.getMessage.contains("no count partials"))
     // re-crawls: superseded versions subtract as negative partials —
     // revised text AND a class move — and the folded model/priors are
@@ -2098,11 +2091,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("LineStream hot set equals the one-shot scrub's; supersede subtracts; guards fire") {
-    import java.nio.file.Files
     import graft.pipeline.TextAnalysis
     import graft.streaming.LineStream
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val root = Files.createTempDirectory("graft-line-store").toString
+    val root = tempDir("graft-line-store").toString
     def hot(r: String): Set[String] =
       LineStream.hotSet(spark, r).as[String].collect().toSet
     def oneShotHot(d: org.apache.spark.sql.DataFrame): Set[String] =
@@ -2135,7 +2127,7 @@ class StreamingSpec extends SparkSpec {
     val oldV = docs.filter($"doc_id" % 7 === 0)
     val staleV = oldV.withColumn("text",
       concat(lit("BANNER LINE\n"), $"text"))
-    val root2 = Files.createTempDirectory("graft-line-upd").toString
+    val root2 = tempDir("graft-line-upd").toString
     LineStream.appendBatch(docs.filter($"doc_id" % 7 =!= 0), 0L,
       root2, "text")
     LineStream.appendBatch(staleV, 1L, root2, "text")
@@ -2154,7 +2146,7 @@ class StreamingSpec extends SparkSpec {
     // an empty store is a loud error, not an empty hot set
     val e3 = intercept[IllegalStateException](
       LineStream.hotSet(spark,
-        Files.createTempDirectory("graft-line-empty").toString))
+        tempDir("graft-line-empty").toString))
     assert(e3.getMessage.contains("no count partials"))
   }
 
@@ -2162,9 +2154,9 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.pipeline.TextAnalysis
     import graft.streaming.NgramLmStream
-    val in = Files.createTempDirectory("graft-nglm-in")
-    val root = Files.createTempDirectory("graft-nglm-root").toString
-    val ckpt = Files.createTempDirectory("graft-nglm-ckpt").toString
+    val in = tempDir("graft-nglm-in")
+    val root = tempDir("graft-nglm-root").toString
+    val ckpt = tempDir("graft-nglm-ckpt").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select($"doc_id", $"text")
     def grids(p: (org.apache.spark.sql.DataFrame,
@@ -2174,7 +2166,7 @@ class StreamingSpec extends SparkSpec {
       p._2.select($"w", $"ll1".cast("string"))
         .as[(String, String)].collect().toSet)
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-nglm-chunk")
+      val tmp = tempDir("graft-nglm-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -2205,7 +2197,7 @@ class StreamingSpec extends SparkSpec {
     // a model with nothing streamed is a loud error, not empty grids
     val e2 = intercept[IllegalStateException](
       NgramLmStream.model(spark,
-        Files.createTempDirectory("graft-nglm-empty").toString))
+        tempDir("graft-nglm-empty").toString))
     assert(e2.getMessage.contains("no count partials"))
     // re-crawls supersede by negative partials: folded model equals
     // retraining on the LATEST snapshot — and the KN derivation
@@ -2237,10 +2229,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("staged swap on a file:-scheme root acts on the real directory") {
-    import java.nio.file.Files
     import graft.pipeline.PartitionedAnn
     import graft.streaming.IvfStream
-    val ivf = Files.createTempDirectory("graft-file-swap").toString
+    val ivf = tempDir("graft-file-swap").toString
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val cents = emb.filter($"vec_id" < 8)
       .select($"vec_id".as("cent_id"), $"embedding".as("cent_vec"))
@@ -2264,10 +2255,10 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     import graft.pipeline.TextAnalysis
     import graft.streaming.SpanStream
-    val in = Files.createTempDirectory("graft-span-in")
-    val root = Files.createTempDirectory("graft-span-root").toString
-    val ckpt = Files.createTempDirectory("graft-span-ckpt").toString
-    val full = Files.createTempDirectory("graft-span-full").toString
+    val in = tempDir("graft-span-in")
+    val root = tempDir("graft-span-root").toString
+    val ckpt = tempDir("graft-span-ckpt").toString
+    val full = tempDir("graft-span-full").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"doc_id", $"n_tokens", $"n_removed", $"clean_text")
@@ -2275,7 +2266,7 @@ class StreamingSpec extends SparkSpec {
     TextAnalysis.writeSpanIndex(docs.filter($"doc_id" % 3 === 0),
       "text", "doc_id", s"$root/base", n = 5, buckets = 16)
     def addChunk(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-span-chunk")
+      val tmp = tempDir("graft-span-chunk")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -2338,7 +2329,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.NgramLmStream
     val d = Seq((0L, "a b c d"), (1L, "b c d e"))
       .toDF("doc_id", "text")
-    val root = Files.createTempDirectory("graft-nglm-stamp").toString
+    val root = tempDir("graft-nglm-stamp").toString
     // crash window: the stamp landed but the first batch never
     // committed (stamp-before-commit ordering) — the store is still
     // cold, so a first append with a DIFFERENT order re-stamps
@@ -2367,11 +2358,10 @@ class StreamingSpec extends SparkSpec {
     // grouped-count job of its own) — pin that it still fires, names
     // the doc, and that the raise lands before the delta/stats writes
     // (a dup batch's doubled evidence never reaches the store)
-    import java.nio.file.Files
     import org.apache.spark.sql.functions.{concat, lit}
     import graft.pipeline.Retrieval
     import graft.streaming.Bm25Stream
-    val root = Files.createTempDirectory("graft-bm25-dup").toString
+    val root = tempDir("graft-bm25-dup").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     Retrieval.writeBm25Index(docs, "text", "doc_id", s"$root/base",
       buckets = 8)
@@ -2407,7 +2397,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{concat, lit}
     import graft.pipeline.Retrieval
     import graft.streaming.{Bm25Stream, IvfStream}
-    val root = Files.createTempDirectory("graft-bm25-stamp").toString
+    val root = tempDir("graft-bm25-stamp").toString
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     Retrieval.writeBm25Index(docs, "text", "doc_id", s"$root/base",
       buckets = 8)

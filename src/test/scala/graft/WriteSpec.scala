@@ -13,7 +13,7 @@ class WriteSpec extends SparkSpec {
   import spark.implicits._
 
   test("write + read round-trips all four tables") {
-    val out = Files.createTempDirectory("graft-write").toString
+    val out = tempDir("graft-write").toString
     val t = new Converter(spark, Converter.coreAdapters)
       .convertAndWrite(fixturesDir, out)
     val back = GraphTables.read(spark, out)
@@ -39,7 +39,7 @@ class WriteSpec extends SparkSpec {
 
   /** A fresh database written from the bundled fixtures. */
   def writtenDb(): String = {
-    val out = Files.createTempDirectory("graft-db").toString
+    val out = tempDir("graft-db").toString
     GraphTables.unpersist(new Converter(spark, Converter.coreAdapters)
       .convertAndWrite(fixturesDir, out))
     out
@@ -126,7 +126,7 @@ class WriteSpec extends SparkSpec {
       else s)
     val broken = t.copy(crossReferences = t.crossReferences
       .withColumn("source_node_id", boom($"source_node_id")))
-    val out = Files.createTempDirectory("graft-write-fail").toString
+    val out = tempDir("graft-write-fail").toString
     val e = intercept[Exception](broken.write(out))
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
     assert(chain.exists(c => Option(c.getMessage)
@@ -146,11 +146,11 @@ class WriteSpec extends SparkSpec {
   test("GraphTables.read lists 41 node types in at most one job") {
     // above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
     // the nodes listing runs as a Spark job
-    val in = Files.createTempDirectory("graft-types")
+    val in = tempDir("graft-types")
     val kids = (1 to 40).map(i => s"""<t$i id="n$i">v$i</t$i>""").mkString
     Files.write(in.resolve("types.xml"),
       s"""<root id="n0">$kids</root>""".getBytes("UTF-8"))
-    val out = Files.createTempDirectory("graft-types-db").toString
+    val out = tempDir("graft-types-db").toString
     GraphTables.unpersist(new Converter(spark, Converter.coreAdapters)
       .convertAndWrite(in.toString, out))
     assert(new java.io.File(s"$out/nodes").list()
@@ -166,11 +166,11 @@ class WriteSpec extends SparkSpec {
   test("node types that parse as doubles read back as strings") {
     // inference types a partition column whose every value parses as a
     // double (`node_type=NaN`, `node_type=Infinity`) as DoubleType
-    val in = Files.createTempDirectory("graft-nan")
+    val in = tempDir("graft-nan")
     Files.write(in.resolve("nan.xml"),
       """<NaN id="n1"><Infinity id="i1"/><Infinity id="i2"/></NaN>"""
         .getBytes("UTF-8"))
-    val out = Files.createTempDirectory("graft-nan-db").toString
+    val out = tempDir("graft-nan-db").toString
     GraphTables.unpersist(new Converter(spark, Converter.coreAdapters)
       .convertAndWrite(in.toString, out))
     val back = GraphTables.read(spark, out)
@@ -186,7 +186,7 @@ class WriteSpec extends SparkSpec {
     def cached() = spark.sparkContext.getRDDStorageInfo
       .map(i => i.id -> i.name).toMap
     val before = cached()
-    val out = Files.createTempDirectory("graft-release").toString
+    val out = tempDir("graft-release").toString
     val t = new Converter(spark, Converter.coreAdapters)
       .convertAndWrite(fixturesDir, out)
     assert((cached().keySet -- before.keySet).size >= 3)
@@ -196,7 +196,7 @@ class WriteSpec extends SparkSpec {
   }
 
   test("CLI main converts a directory and prints stats") {
-    val out = Files.createTempDirectory("graft-cli").toString + "/db"
+    val out = tempDir("graft-cli").toString + "/db"
     val stdout = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(stdout)) {
       Main.main(Array("-i", fixturesDir, "-o", out, "--examples",
@@ -214,14 +214,14 @@ class WriteSpec extends SparkSpec {
   }
 
   test("CLI main reports unparseable files in the stats") {
-    val in = Files.createTempDirectory("graft-cli-bad")
+    val in = tempDir("graft-cli-bad")
     Files.copy(java.nio.file.Paths.get(s"$fixturesDir/simple.xml"),
       in.resolve("simple.xml"))
     // no root element ever opens ⇒ nothing to salvage ⇒ skipped (a
     // merely-unclosed file would now be prefix-salvaged instead)
     Files.write(in.resolve("broken.xml"),
       "this is not xml at all".getBytes("UTF-8"))
-    val out = Files.createTempDirectory("graft-cli-bad-out").toString + "/db"
+    val out = tempDir("graft-cli-bad-out").toString + "/db"
     val stdout = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(stdout)) {
       Main.main(Array("-i", in.toString, "-o", out, "--force"))
